@@ -18,17 +18,18 @@ import scala.concurrent.duration.Duration
   */
 object Par {
 
+  // pool threads are marked by their class, not their name: a caller's
+  // own thread may carry any name
+  private final class PoolThread(r: Runnable) extends Thread(r, "graft-par-action") {
+    setDaemon(true)
+  }
+
   // bounded, daemon, shared: 2-3 in flight is the useful range — enough
   // to fill a tail, not enough to fight for executor slots
   private lazy val pool = ExecutionContext.fromExecutorService(
-    Executors.newFixedThreadPool(4, r => {
-      val t = new Thread(r, "graft-par-action")
-      t.setDaemon(true)
-      t
-    }))
+    Executors.newFixedThreadPool(4, r => new PoolThread(r)))
 
-  private def onPoolThread: Boolean =
-    Thread.currentThread().getName == "graft-par-action"
+  private def onPoolThread: Boolean = Thread.currentThread().isInstanceOf[PoolThread]
 
   /** Run the given thunks concurrently; block until ALL finish; rethrow
     * the first failure (after every thunk has completed or failed, so a

@@ -533,9 +533,10 @@ object Dedup {
         // corpus-sized table into the verify join; the shuffle joins
         // below then move only candidate-bounded rows, and the
         // per-pair Jaccard work stays spread across shuffle partitions
+        // the candidate ids are aliased: idCol may itself be "corpus_id"
         val caCand = corpusSets
-          .join(broadcast(pairs.select(col("corpus_id")).distinct()),
-            corpusSets(idCol) === col("corpus_id"), "left_semi")
+          .join(broadcast(pairs.select(col("corpus_id").as("__cid")).distinct()),
+            corpusSets(idCol) === col("__cid"), "left_semi")
           .select(col(idCol).as("corpus_id"), col("__shingles").as("__sb"))
         val verified = pairs.join(ba, "batch_id").join(caCand, "corpus_id")
           .filter(least(size(col("__sa")), size(col("__sb"))).cast("double") >=

@@ -18,8 +18,11 @@ import graft.types._
   *   Int64List { repeated int64 value = 1 [packed] }
   *
   * Feature values are modeled by [[Feature]]; null/default semantics of
-  * the row→Example path are in [[TfRecords.toExample]], ported from
-  * `ml_hadoop_experiment/tensorflow/tfrecords.py:104-207`.
+  * the row→Example path are in [[ExampleEncoder]], ported from
+  * `ml_hadoop_experiment/tensorflow/tfrecords.py:104-207`. This
+  * map-based codec is the driver-local API and the byte-level reference
+  * for the spec-compiled [[ExampleEncoder]] / [[ExampleDecoder]] that
+  * the distributed TFRecord paths use.
   *
   * Encoding detail: map entries are emitted in sorted key order so the
   * serialized form is deterministic (protobuf map order is unspecified;

@@ -1,7 +1,6 @@
 package graft.records
 
 import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
-import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.{CRC32C, GZIPInputStream, GZIPOutputStream}
 
 /** TFRecord container format (public spec, tensorflow/core/lib/io/
@@ -18,28 +17,49 @@ object TfRecordIO {
 
   private val MaskDelta = 0xa282ead8L
 
-  private[records] def maskedCrc(bytes: Array[Byte], off: Int, len: Int): Int = {
-    val crc = new CRC32C()
+  private def maskedCrc(crc: CRC32C, bytes: Array[Byte], off: Int, len: Int): Int = {
+    crc.reset()
     crc.update(bytes, off, len)
     val v = crc.getValue
     ((((v >>> 15) | (v << 17)) + MaskDelta) & 0xffffffffL).toInt
   }
 
+  private def putIntLE(b: Array[Byte], at: Int, v: Int): Unit = {
+    b(at) = v.toByte
+    b(at + 1) = (v >>> 8).toByte
+    b(at + 2) = (v >>> 16).toByte
+    b(at + 3) = (v >>> 24).toByte
+  }
+
+  private def getIntLE(b: Array[Byte], at: Int): Int =
+    (b(at) & 0xff) | (b(at + 1) & 0xff) << 8 | (b(at + 2) & 0xff) << 16 | (b(at + 3) & 0xff) << 24
+
+  private val BufferSize = 1 << 16
+
+  // Writer and Reader reuse their framing arrays and CRC for every record
   final class Writer(raw: OutputStream, gzip: Boolean) extends AutoCloseable {
     private val out =
-      if (gzip) new BufferedOutputStream(new GZIPOutputStream(raw))
-      else new BufferedOutputStream(raw)
+      if (gzip) new BufferedOutputStream(new GZIPOutputStream(raw, BufferSize), BufferSize)
+      else new BufferedOutputStream(raw, BufferSize)
+    private val header = new Array[Byte](12)
+    private val footer = new Array[Byte](4)
+    private val crc = new CRC32C()
+    private var written = 0L
 
-    def write(record: Array[Byte]): Unit = {
-      val header = ByteBuffer.allocate(12).order(ByteOrder.LITTLE_ENDIAN)
-      header.putLong(record.length.toLong)
-      val lenBytes = java.util.Arrays.copyOfRange(header.array(), 0, 8)
-      header.putInt(maskedCrc(lenBytes, 0, 8))
-      out.write(header.array())
-      out.write(record)
-      val footer = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-      footer.putInt(maskedCrc(record, 0, record.length))
-      out.write(footer.array())
+    /** Records written so far. */
+    def count: Long = written
+
+    def write(record: Array[Byte]): Unit = write(record, 0, record.length)
+
+    def write(bytes: Array[Byte], off: Int, len: Int): Unit = {
+      putIntLE(header, 0, len)
+      putIntLE(header, 4, 0)
+      putIntLE(header, 8, maskedCrc(crc, header, 0, 8))
+      out.write(header)
+      out.write(bytes, off, len)
+      putIntLE(footer, 0, maskedCrc(crc, bytes, off, len))
+      out.write(footer)
+      written += 1
     }
 
     override def close(): Unit = out.close()
@@ -47,13 +67,14 @@ object TfRecordIO {
 
   final class Reader(raw: InputStream, gzip: Boolean) extends Iterator[Array[Byte]] with AutoCloseable {
     private val in =
-      if (gzip) new BufferedInputStream(new GZIPInputStream(raw))
-      else new BufferedInputStream(raw)
+      if (gzip) new BufferedInputStream(new GZIPInputStream(raw, BufferSize), BufferSize)
+      else new BufferedInputStream(raw, BufferSize)
+    private val header = new Array[Byte](12)
+    private val crc = new CRC32C()
     private var nextRecord: Array[Byte] = _
     private var finished = false
 
-    private def readFully(n: Int): Array[Byte] = {
-      val buf = new Array[Byte](n)
+    private def readFully(buf: Array[Byte], n: Int): Unit = {
       var off = 0
       while (off < n) {
         val read = in.read(buf, off, n - off)
@@ -63,43 +84,41 @@ object TfRecordIO {
         }
         off += read
       }
-      buf
     }
 
-    /** Reads the 12-byte header, or returns null on a clean EOF exactly at
-      * a record boundary. EOF anywhere else is a torn record and must fail
-      * the task (TF raises DataLossError here) — silently truncating would
-      * shorten the dataset, compounding any orphan-partial-file problem.
+    /** Reads the 12-byte header, or returns false on a clean EOF exactly
+      * at a record boundary. EOF anywhere else is a torn record and must
+      * fail the task (TF raises DataLossError here) — silently truncating
+      * would shorten the dataset, compounding any orphan-partial-file
+      * problem.
       */
-    private def readHeaderOrEof(): Array[Byte] = {
-      val buf = new Array[Byte](12)
-      val first = in.read(buf, 0, 12)
-      if (first < 0) return null
+    private def readHeaderOrEof(): Boolean = {
+      val first = in.read(header, 0, 12)
+      if (first < 0) return false
       var off = first
       while (off < 12) {
-        val read = in.read(buf, off, 12 - off)
+        val read = in.read(header, off, 12 - off)
         if (read < 0) throw new EOFException(s"truncated record header: $off of 12 bytes")
         off += read
       }
-      buf
+      true
     }
 
-    private def advance(): Unit = {
-      val header = readHeaderOrEof()
-      if (header == null) {
+    private def advance(): Unit =
+      if (!readHeaderOrEof()) {
         finished = true
         in.close()
       } else {
-        val bb = ByteBuffer.wrap(header).order(ByteOrder.LITTLE_ENDIAN)
-        val len = bb.getLong
-        val lenCrc = bb.getInt
-        require(lenCrc == maskedCrc(header, 0, 8), "corrupt TFRecord: length crc mismatch")
-        val data = readFully(len.toInt)
-        val dataCrc = ByteBuffer.wrap(readFully(4)).order(ByteOrder.LITTLE_ENDIAN).getInt
-        require(dataCrc == maskedCrc(data, 0, data.length), "corrupt TFRecord: data crc mismatch")
+        val len = (getIntLE(header, 0) & 0xffffffffL) | (getIntLE(header, 4).toLong << 32)
+        require(getIntLE(header, 8) == maskedCrc(crc, header, 0, 8),
+          "corrupt TFRecord: length crc mismatch")
+        val data = new Array[Byte](len.toInt)
+        readFully(data, data.length)
+        readFully(header, 4)
+        require(getIntLE(header, 0) == maskedCrc(crc, data, 0, data.length),
+          "corrupt TFRecord: data crc mismatch")
         nextRecord = data
       }
-    }
 
     advance()
 

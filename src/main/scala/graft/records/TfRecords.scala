@@ -15,7 +15,8 @@ import graft.types._
   * re-expressing `ml_hadoop_experiment/tensorflow/tfrecords.py:104-268`.
   *
   * Null/default encode semantics (pinned by
-  * `tests/tensorflow/protobuf_examples.py:9-146`):
+  * `tests/tensorflow/protobuf_examples.py:9-146`, implemented once in
+  * [[ExampleEncoder]]):
   *   - an empty list is treated as null for FixedLen specs;
   *   - null + spec default → the feature is *omitted* from the record
   *     (the same spec fills the default back at read time);
@@ -28,111 +29,32 @@ import graft.types._
   * them so the shuffle isn't recomputed by the write job; per-partition
   * writers stream records (no buffering of the partition) and return
   * (path, count) manifests collected driver-side — counts are
-  * vocabulary-sized metadata, not data.
+  * vocabulary-sized metadata, not data. The per-record codec is compiled
+  * once per partition from (schema, specs): [[writeExamples]] and the
+  * `tfrecord` source's flat-Example writer encode Spark's internal rows
+  * with [[ExampleEncoder]], and the source's flat-Example reader decodes
+  * straight into internal rows with [[ExampleDecoder]], so no record goes
+  * through a `Row`, a feature map or [[Feature]] objects. The Map API
+  * ([[toFeatures]], [[toExample]], [[ExampleCodec]]) stays for
+  * driver-local use, SequenceExamples, [[readExamplesDf]] and
+  * `TfShaped`, and is the reference the compiled codec is tested
+  * against; [[toExample]] runs through the same compiled plan.
   */
 object TfRecords {
 
   // ---- row → Example (reference `to_tf_proto`, tfrecords.py:184-207) ----
 
-  private def typeDefault(spec: FixedLenFeature): Seq[Any] = {
-    val value: Any =
-      if (spec.dtype.isInteger) 0L
-      else if (spec.dtype.isFloating) 0.0f
-      else if (spec.dtype.isString) ""
-      else throw new IllegalArgumentException(s"No default value for type ${spec.dtype}")
-    Seq.fill(spec.shape.headOption.getOrElse(1))(value)
-  }
-
-  private def asList(value: Any): Seq[Any] = value match {
-    case s: collection.Seq[_] => s.toSeq
-    case a: Array[Byte] => Seq(a)
-    case a: Array[_] => a.toSeq
-    case v => Seq(v)
-  }
-
-  /** Reference `_preprocess_feature_value` (tfrecords.py:135-159).
-    * Returns None when the feature must be omitted from the record.
-    */
-  private[records] def preprocessValue(value: Any, spec: FeatureSpec): Option[Seq[Any]] = {
-    val v0 = spec match {
-      case f: FixedLenFeature =>
-        val emptied = value match {
-          case s: collection.Seq[_] if s.isEmpty => null
-          case a: Array[_] if a.isEmpty && !value.isInstanceOf[Array[Byte]] => null
-          case other => other
-        }
-        if (emptied == null) {
-          if (f.defaultValue.isDefined) null // omit; reader restores default
-          else typeDefault(f)
-        } else emptied
-      case _: VarLenFeature => value
-    }
-    Option(v0).map(asList)
-  }
-
-  /** Reference `_value_to_feature` (tfrecords.py:162-181): strict per-value
-    * dtype validation.
-    */
-  private[records] def valueToFeature(values: Seq[Any], spec: FeatureSpec): Feature =
-    if (spec.dtype.isInteger) {
-      Feature.Int64List(values.map {
-        case i: Int => i.toLong
-        case l: Long => l
-        case other => throw new IllegalArgumentException(
-          s"$other in $values is not integer as required by $spec")
-      })
-    } else if (spec.dtype.isFloating) {
-      Feature.FloatList(values.map {
-        case f: Float => f
-        case d: Double => d.toFloat
-        case i: Int => i.toFloat
-        case l: Long => l.toFloat
-        case other => throw new IllegalArgumentException(
-          s"$other in $values is not a number as required by $spec")
-      })
-    } else {
-      Feature.BytesList(values.map {
-        case s: String => s.getBytes("UTF-8")
-        case b: Array[Byte] => b
-        case other => throw new IllegalArgumentException(
-          s"$other in $values is not str or bytes as required by $spec")
-      })
-    }
-
   /** Build the Example feature map for one record (reference `to_tf_proto`). */
   def toFeatures(x: Map[String, Any], specs: FeatureSpec.Specs): Map[String, Feature] =
     specs.flatMap { case (name, spec) =>
-      preprocessValue(x.getOrElse(name, null), spec) match {
-        case None => None
-        case Some(values) =>
-          spec match {
-            case f: FixedLenFeature =>
-              val expected = f.shape.headOption.getOrElse(1)
-              if (values.length != expected)
-                throw new IllegalArgumentException(
-                  s"value $values does not correspond to expected shape in spec $spec")
-            case _ =>
-          }
-          Some(name -> valueToFeature(values, spec))
-      }
+      ExampleEncoder.feature(x.getOrElse(name, null), spec).map(name -> _)
     }
 
-  /** Serialize one record. */
-  def toExample(x: Map[String, Any], specs: FeatureSpec.Specs): Array[Byte] =
-    ExampleCodec.encode(toFeatures(x, specs))
-
-  /** Serialize a Row against the specs (columns not in the schema are
-    * treated as absent).
+  /** Serialize one record. Compiles the specs on every call; encode many
+    * records with one [[ExampleEncoder]].
     */
-  def rowToExample(row: Row, specs: FeatureSpec.Specs): Array[Byte] = {
-    val schema = row.schema
-    val m = specs.keys.flatMap { name =>
-      if (schema != null && schema.fieldNames.contains(name))
-        Some(name -> row.get(schema.fieldIndex(name)))
-      else None
-    }.toMap
-    toExample(m, specs)
-  }
+  def toExample(x: Map[String, Any], specs: FeatureSpec.Specs): Array[Byte] =
+    ExampleEncoder(specs).encode(x)
 
   /** Spec-driven column pruning (reference P1 `filtered_columns`,
     * `dataframe_prediction_helper.py:285-286`): the DataFrame columns
@@ -153,22 +75,29 @@ object TfRecords {
       index: Int,
       exportPath: String,
       hadoopConf: org.apache.hadoop.conf.Configuration,
-      gzip: Boolean = true): Seq[(String, Long)] = {
+      gzip: Boolean = true): Seq[(String, Long)] =
+    writePart(index, exportPath, hadoopConf, gzip)(w => records.foreach(w.write))
+
+  private def writePart(
+      index: Int,
+      exportPath: String,
+      hadoopConf: org.apache.hadoop.conf.Configuration,
+      gzip: Boolean)(body: TfRecordIO.Writer => Unit): Seq[(String, Long)] = {
     val remotePath = f"$exportPath/part-$index%05d"
     val fs = FileSystem.get(new URI(exportPath), hadoopConf)
-    val out = fs.create(new HPath(remotePath), true)
-    var count = 0L
-    val writer = new TfRecordIO.Writer(out, gzip)
-    try records.foreach { r => writer.write(r); count += 1 }
+    val writer = new TfRecordIO.Writer(fs.create(new HPath(remotePath), true), gzip)
+    try body(writer)
     finally writer.close()
-    Seq((remotePath, count))
+    Seq((remotePath, writer.count))
   }
 
   /** Distributed sink: every partition writes its own part file; the
     * driver collects the (path, count) manifest (reference
-    * `write_example_rdd`). `requireHdfs` keeps the reference's
-    * full-HDFS-path guard for production writes; disable it for local
-    * filesystems.
+    * `write_example_rdd`). Rows are encoded from Spark's internal rows by
+    * one [[ExampleEncoder]] per partition; spec features the DataFrame
+    * has no column for are encoded as null. `requireHdfs` keeps the
+    * reference's full-HDFS-path guard for production writes; disable it
+    * for local filesystems.
     */
   def writeExamples(
       df: DataFrame,
@@ -180,10 +109,10 @@ object TfRecords {
       throw new IllegalArgumentException(s"$exportPath is not a full hdfs path")
     val confSer = new org.apache.spark.util.SerializableConfiguration(
       df.sparkSession.sparkContext.hadoopConfiguration)
-    val specsB = specs
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
-      val serialized = rows.map(r => rowToExample(r, specsB))
-      writeExamplePartition(serialized, idx, exportPath, confSer.value, gzip).iterator
+    val schema = df.schema
+    df.queryExecution.toRdd.mapPartitionsWithIndex { (idx, rows) =>
+      val encoder = ExampleEncoder(schema, specs)
+      writePart(idx, exportPath, confSer.value, gzip)(w => rows.foreach(encoder.write(_, w))).iterator
     }.collect().toSeq
   }
 
@@ -288,7 +217,7 @@ object TfRecords {
     val ctx = toFeatures(context, contextSpecs)
     val lists = sequenceSpecs.flatMap { case (name, spec) =>
       featureLists.get(name).map { steps =>
-        name -> steps.map(step => valueToFeature(asList(step), spec))
+        name -> steps.map(step => ExampleEncoder.valueToFeature(ExampleEncoder.asList(step), spec))
       }
     }
     ExampleCodec.encodeSequence(ctx, lists)

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.records.{ExampleCodec, TfRecordIO, TfRecords}
+import graft.records.{ExampleCodec, ExampleDecoder, ExampleEncoder, TfRecordIO, TfRecords}
 import graft.types._
 
 /** DataSource V2 for the TFRecord/Example format — the one custom
@@ -196,31 +196,12 @@ final class TfRecordReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[TfRecordInputPartition].file
     // flat-Example specs reject sequence-only schemas (nested arrays);
-    // derive them only on the flat path
-    lazy val specs = TfRecordDataSource.specsFor(schema)
+    // compile the decoder only on the flat path, at the first record
+    lazy val decoder = new ExampleDecoder(schema, TfRecordDataSource.specsFor(schema))
     val fields = schema.fields
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    lazy val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
     val fs = FileSystem.get(new URI(file), conf.value)
     val reader = new TfRecordIO.Reader(fs.open(new HPath(file)), gzip)
-
-    def decodeExample(bytes: Array[Byte]): Seq[Any] = {
-      val features = ExampleCodec.decode(bytes)
-      fields.map { f =>
-        val spec = specs(f.name)
-        features.get(f.name) match {
-          case Some(feat) =>
-            val vs = ExampleCodec.featureValues(feat, spec.dtype)
-            spec match {
-              case FixedLenFeature(shape, _, _) if shape.isEmpty => vs.head
-              case _ => vs
-            }
-          case None =>
-            if (f.nullable) null
-            else throw new IllegalArgumentException(
-              s"feature ${f.name} absent and column is not nullable")
-        }
-      }.toSeq
-    }
 
     // SequenceExample rows (SURVEY S5, reference tfrecords.py:60-72):
     // scalar columns read the context, array columns read the feature
@@ -266,11 +247,11 @@ final class TfRecordReaderFactory(
       override def next(): Boolean =
         if (!reader.hasNext) false
         else {
-          val values =
-            if (sequenceMode) decodeSequenceRecord(reader.next())
-            else decodeExample(reader.next())
-          current = toCatalyst(org.apache.spark.sql.Row.fromSeq(values))
-            .asInstanceOf[InternalRow]
+          current =
+            if (sequenceMode)
+              toCatalyst(org.apache.spark.sql.Row.fromSeq(decodeSequenceRecord(reader.next())))
+                .asInstanceOf[InternalRow]
+            else decoder.decode(reader.next())
           true
         }
       override def get(): InternalRow = current
@@ -352,41 +333,36 @@ final class TfRecordWriterFactory(
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     // each mode rejects the other's schemas (nested arrays are
-    // sequence-only), so only derive the specs for the active mode
-    lazy val specs = TfRecordDataSource.specsFor(schema)
+    // sequence-only), so only compile the active mode, at the first record
+    lazy val encoder = ExampleEncoder(schema, TfRecordDataSource.specsFor(schema))
     lazy val (ctxSpecs, seqSpecs) = TfRecordDataSource.sequenceSpecsFor(schema)
     val ctxNames = schema.fields.collect {
       case f if !f.dataType.isInstanceOf[ArrayType] => f.name
     }.toSet
-    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+    lazy val toScala = CatalystTypeConverters.createToScalaConverter(schema)
     val filePath = f"$path/part-$partitionId%05d-$taskId"
     val fs = FileSystem.get(new URI(path), conf.value)
     fs.mkdirs(new HPath(path))
     val writer = new TfRecordIO.Writer(fs.create(new HPath(filePath), true), gzip)
-    var count = 0L
 
     new DataWriter[InternalRow] {
-      override def write(record: InternalRow): Unit = {
-        val row = toScala(record).asInstanceOf[org.apache.spark.sql.Row]
-        val values = schema.fieldNames.zipWithIndex.map { case (n, i) =>
-          n -> row.get(i)
-        }.toMap
-        val bytes =
-          if (sequenceMode) {
-            val (ctx, lists) = values.partition { case (n, _) => ctxNames(n) }
-            TfRecords.toSequenceExample(
-              ctx,
-              lists.collect { case (n, v) if v != null =>
-                n -> v.asInstanceOf[collection.Seq[Any]].toSeq
-              },
-              ctxSpecs, seqSpecs)
-          } else TfRecords.toExample(values, specs)
-        writer.write(bytes)
-        count += 1
-      }
+      override def write(record: InternalRow): Unit =
+        if (sequenceMode) {
+          val row = toScala(record).asInstanceOf[org.apache.spark.sql.Row]
+          val values = schema.fieldNames.zipWithIndex.map { case (n, i) =>
+            n -> row.get(i)
+          }.toMap
+          val (ctx, lists) = values.partition { case (n, _) => ctxNames(n) }
+          writer.write(TfRecords.toSequenceExample(
+            ctx,
+            lists.collect { case (n, v) if v != null =>
+              n -> v.asInstanceOf[collection.Seq[Any]].toSeq
+            },
+            ctxSpecs, seqSpecs))
+        } else encoder.write(record, writer)
       override def commit(): WriterCommitMessage = {
         writer.close()
-        TfRecordCommitMessage(filePath, count)
+        TfRecordCommitMessage(filePath, writer.count)
       }
       // A failed/speculative attempt must remove its partial file: the scan
       // lists the directory, so an orphan part would read back as

@@ -89,6 +89,30 @@ class DedupIndexSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet shouldBe directPairs
   }
 
+  test("id columns named corpus_id or batch_id work on every dedup-against path") {
+    val (corpus, batch) = mkCorpusAndBatch(7)
+    def ids(df: org.apache.spark.sql.DataFrame, idCol: String) =
+      df.select(idCol).collect().map(_.getLong(0)).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("batch_id", "corpus_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val survivors = ids(Dedup.dedupAgainst(batch, corpus, "doc_id", "text",
+      shingleSize = 1, numHashes = 64, bands = 16, threshold = 0.9), "doc_id")
+    val matched = pairs(Dedup.nearDuplicatesAgainst(batch, corpus, "doc_id", "text",
+      shingleSize = 1, threshold = 0.9))
+    matched should not be empty
+    for (idCol <- Seq("corpus_id", "batch_id")) {
+      val c = corpus.withColumnRenamed("doc_id", idCol)
+      val b = batch.withColumnRenamed("doc_id", idCol)
+      ids(Dedup.dedupAgainst(b, c, idCol, "text",
+        shingleSize = 1, numHashes = 64, bands = 16, threshold = 0.9), idCol) shouldBe survivors
+      pairs(Dedup.nearDuplicatesAgainst(b, c, idCol, "text",
+        shingleSize = 1, threshold = 0.9)) shouldBe matched
+      val idx = DedupIndex.build(c, idCol, "text", params)
+      ids(DedupIndex.dedupAgainst(b, idx, idCol, "text", threshold = 0.9), idCol) shouldBe survivors
+      pairs(DedupIndex.nearDuplicatesAgainst(b, idx, idCol, "text", threshold = 0.9)) shouldBe matched
+    }
+  }
+
   test("query over a read index scans parquet, not corpus text") {
     val (corpus, batch) = mkCorpusAndBatch(5)
     val path = Files.createTempDirectory("dedup_index_spec_").toString
