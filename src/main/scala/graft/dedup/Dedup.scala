@@ -444,7 +444,22 @@ object Dedup {
       threshold: Double = 0.8,
       seed: Long = 42L,
       maxBucketSize: Long = 100000L,
-      materialize: Boolean = true): DataFrame = {
+      materialize: Boolean = true): DataFrame =
+    verifiedAgainst(batch, corpus, idCol, textCol, shingleSize, numHashes,
+      bands, threshold, seed, maxBucketSize, materialize) { verified =>
+      if (materialize) verified.localCheckpoint(true) else verified
+    }
+
+  /** [[nearDuplicatesAgainst]]'s plan, handed to `finish` while the
+    * per-call caches (materialize = true) are still live; they are
+    * released once `finish` returns, so `finish` must run its actions
+    * itself.
+    */
+  private def verifiedAgainst[T](
+      batch: DataFrame, corpus: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int, numHashes: Int, bands: Int, threshold: Double,
+      seed: Long, maxBucketSize: Long, materialize: Boolean)(
+      finish: DataFrame => T): T = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     require(maxBucketSize >= 1, s"maxBucketSize must be >= 1, got $maxBucketSize")
     val rowsPerBand = numHashes / bands
@@ -458,13 +473,13 @@ object Dedup {
         numHashes, seed))
     // each side's shingle table feeds TWO plan branches (signature
     // buckets + verify join-back). With materialize = true (default),
-    // persist both so normalization/shingling runs once per side and
-    // eagerly checkpoint the (small) matched-pair result so the caches
-    // can be released before returning — same contract and same
-    // tradeoff as nearDuplicatesBySets: localCheckpoint blocks are
-    // executor-local and not replayable after executor loss, so
-    // materialize = false keeps everything lazy and fault-tolerant at
-    // the price of the double shingle derivation.
+    // persist both so normalization/shingling runs once per side;
+    // nearDuplicatesAgainst eagerly checkpoints the (small) matched-pair
+    // result so the caches can be released before returning — same
+    // contract and same tradeoff as nearDuplicatesBySets:
+    // localCheckpoint blocks are executor-local and not replayable after
+    // executor loss, so materialize = false keeps everything lazy and
+    // fault-tolerant at the price of the double shingle derivation.
     // CPU-dense per-doc derivation (regex normalize + shingling +
     // 64-hash MinHash) must not be serialized by the input's file
     // layout: a side arriving as one unsplittable file computes
@@ -473,8 +488,9 @@ object Dedup {
     // (id, text) rows moves bytes only and decouples the compute
     // parallelism from the scan splits; AQE cannot coalesce it down
     // (tiny byte sizes would mis-size the compute-bound stage).
-    // materialize-only: the lazy path keeps the plan free of extra
-    // exchanges, as documented.
+    // materialize-only: the lazy path skips this input spread, but it
+    // still exchanges the matched buckets below like the materialized
+    // path does.
     def spread(df: DataFrame): DataFrame =
       if (!materialize) df
       else df.repartition(
@@ -545,7 +561,7 @@ object Dedup {
             graft.functions.JaccardDistinct.jaccardDistinct(col("__sa"), col("__sb")))
           .filter(col("jaccard") >= threshold)
           .select(col("batch_id"), col("corpus_id"), col("jaccard"))
-        if (materialize) verified.localCheckpoint(true) else verified
+        finish(verified)
       } finally {
         if (materialize) pairs.unpersist()
       }
@@ -558,11 +574,16 @@ object Dedup {
   }
 
   /** `batch` reduced to rows that duplicate NOTHING in `corpus`:
-    * removes exact (normalized) content matches with one anti-join on
-    * the 128-bit fingerprint, then near-duplicates via
-    * [[nearDuplicatesAgainst]]. Dedup WITHIN the batch is a separate
-    * concern — run [[exactDedup]] / [[nearDuplicates]] +
-    * [[Components.keepCanonical]] first, then this against the corpus.
+    * removes exact (normalized) content matches on the 128-bit
+    * fingerprint, then near-duplicates via [[nearDuplicatesAgainst]].
+    * Dedup WITHIN the batch is a separate concern — run [[exactDedup]] /
+    * [[nearDuplicates]] + [[Components.keepCanonical]] first, then this
+    * against the corpus.
+    *
+    * With materialize = true (default) the hits are collected and the
+    * result is a filter over `batch` (see [[survivorsAgainst]], shared
+    * with [[DedupIndex.dedupAgainst]]); materialize = false keeps both
+    * steps as lazy anti-joins against the corpus.
     */
   def dedupAgainst(
       batch: DataFrame,
@@ -576,19 +597,75 @@ object Dedup {
       seed: Long = 42L,
       maxBucketSize: Long = 100000L,
       materialize: Boolean = true): DataFrame = {
+    val corpusKeys = corpus.select(TextStats.fingerprintMd5(col(textCol)).as("__key"))
+    def verified[T](survivors: DataFrame)(finish: DataFrame => T): T =
+      verifiedAgainst(survivors, corpus, idCol, textCol, shingleSize,
+        numHashes, bands, threshold, seed, maxBucketSize, materialize)(finish)
+    if (materialize)
+      survivorsAgainst(batch, corpusKeys, idCol, textCol)(verified(_)(matchedBatchIds))
+    else
+      lazySurvivorsAgainst(batch, corpusKeys.distinct(), idCol, textCol)(verified(_)(identity))
+  }
+
+  /** The materialized dedup-against shared by [[dedupAgainst]] and
+    * [[DedupIndex.dedupAgainst]]. Per-call state is bounded by the
+    * batch (the module's batch ≪ corpus contract):
+    *   - exact hits: `storedKeys` (`__key` fingerprints) is semi-joined
+    *     to the broadcast batch fingerprints — one map-side scan, the
+    *     stored side never shuffled — and the distinct hit keys (at most
+    *     one per batch row) are collected;
+    *   - near hits: `nearIds` runs the near-duplicate verify over the
+    *     exact survivors and returns the matched batch ids;
+    *   - the result is `batch` filtered by both hit sets: no join, no
+    *     cached blocks, no reference to the stored side, so re-running
+    *     it re-reads only the batch.
+    * Exact hits are filtered by fingerprint and near hits by id — the
+    * keys of the lazy path's two anti-joins, with their null semantics:
+    * a null text (null fingerprint) survives the exact step and a null
+    * id survives the near step.
+    */
+  private[dedup] def survivorsAgainst(
+      batch: DataFrame, storedKeys: DataFrame, idCol: String, textCol: String)(
+      nearIds: DataFrame => Array[Any]): DataFrame = {
     val key = TextStats.fingerprintMd5(col(textCol))
-    val corpusKeys = corpus.select(key.as("__key")).distinct()
-    val exactSurvivors = batch.withColumn("__key", key)
-      .join(corpusKeys, Seq("__key"), "left_anti")
+    val exactKeys = distinctValues(storedKeys
+      .join(broadcast(batch.select(key.as("__key"))), Seq("__key"), "left_semi"))
+    val exactSurvivors = without(batch, key, exactKeys)
+    without(exactSurvivors, col(idCol), nearIds(exactSurvivors).filter(_ != null))
+  }
+
+  /** [[survivorsAgainst]] as lazy anti-joins (materialize = false):
+    * `nearMatches` returns the (batch_id, ...) verify plan over the
+    * exact survivors.
+    */
+  private[dedup] def lazySurvivorsAgainst(
+      batch: DataFrame, storedKeys: DataFrame, idCol: String, textCol: String)(
+      nearMatches: DataFrame => DataFrame): DataFrame = {
+    val exactSurvivors = batch
+      .withColumn("__key", TextStats.fingerprintMd5(col(textCol)))
+      .join(storedKeys, Seq("__key"), "left_anti")
       .drop("__key")
-    val nearMatched = nearDuplicatesAgainst(
-      exactSurvivors, corpus, idCol, textCol,
-      shingleSize, numHashes, bands, threshold, seed, maxBucketSize,
-      materialize)
+    val nearMatched = nearMatches(exactSurvivors)
       .select(col("batch_id").as(idCol)).distinct()
-    // near-matched ids are batch-bounded: broadcast the anti side
+    // near-matched ids are batch-bounded: broadcast the anti side so
+    // the survivors never shuffle
     exactSurvivors.join(broadcast(nearMatched), Seq(idCol), "left_anti")
   }
+
+  /** The distinct `batch_id`s of a verified near-match plan. */
+  private[dedup] def matchedBatchIds(verified: DataFrame): Array[Any] =
+    distinctValues(verified.select(col("batch_id")))
+
+  // the distinct values of a one-column plan, deduplicated inside each
+  // partition and then on the driver: a distinct() would add an
+  // exchange, and so a job, to a collect of batch-bounded values
+  private def distinctValues(df: DataFrame): Array[Any] =
+    df.rdd.mapPartitions(_.map(_.get(0)).toSet.iterator).collect().distinct
+
+  // rows of `df` whose `c` is null or outside `hits` — a left_anti
+  // join's null semantics, as a filter
+  private def without(df: DataFrame, c: Column, hits: Array[Any]): DataFrame =
+    if (hits.isEmpty) df else df.filter(c.isNull || !c.isin(hits.toIndexedSeq: _*))
 
   // ---- SimHash ----
 

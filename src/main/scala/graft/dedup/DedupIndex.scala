@@ -13,8 +13,9 @@ import graft.text.TextStats
   * [[graft.sim.Similarity.writeIvfIndex]] for ANN) and lets every
   * subsequent batch dedup against it touching only:
   *
-  *   - `exact`   — the distinct 128-bit content fingerprints
-  *                 (anti-join target for exact matches);
+  *   - `exact`   — the 128-bit content fingerprints per corpus id
+  *                 (scanned map-side against the batch's fingerprints
+  *                 for exact matches);
   *   - `buckets` — the banded MinHash (band, bucket) → capped member
   *                 list table (equi-join target for near-dup
   *                 candidates; the cap is baked at build time with the
@@ -716,101 +717,118 @@ object DedupIndex {
     * (band, bucket) equi-join against the stored bucket table, and the
     * Jaccard verify joins the stored shingle sets. Returns
     * (batch_id, corpus_id, jaccard) with jaccard ≥ threshold.
+    *
+    * The plan holds no cache: it is one query in which each stored
+    * table is scanned once (the two consumers of the candidate pairs
+    * share one exchange) and none is shuffled. materialize = true
+    * (default) checkpoints the (small) result locally — executor-local
+    * blocks, not replayable after executor loss; materialize = false
+    * returns the lazy plan.
     */
   def nearDuplicatesAgainst(
       batch: DataFrame, index: Index, idCol: String, textCol: String,
       threshold: Double = 0.8, materialize: Boolean = true): DataFrame = {
+    val verified = verifiedAgainst(batch, index, idCol, textCol, threshold, materialize)
+    if (materialize) verified.localCheckpoint(true) else verified
+  }
+
+  private def verifiedAgainst(
+      batch: DataFrame, index: Index, idCol: String, textCol: String,
+      threshold: Double, materialize: Boolean): DataFrame = {
     val p = index.params
-    val batchSets0 = batch
-      .select(col(idCol), Dedup.shingles(col(textCol), p.shingleSize).as("__shingles"))
+    // the batch's shingle sets are batch-bounded and feed two branches
+    // (bucket lists + verify): deriving them twice is cheaper than a
+    // cache, whose build is one more job per call
+    def sets(df: DataFrame, id: String) = df
+      .select(col(idCol).as(id), Dedup.shingles(col(textCol), p.shingleSize).as("__shingles"))
       .filter(size(col("__shingles")) > 0)
-    val batchSets =
-      if (materialize) batchSets0
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else batchSets0
-    try {
-      val batchBuckets = cappedBuckets(
-        batchSets.withColumnRenamed(idCol, "__bid")
-          .select(col("__bid"), col("__shingles")),
-        "__bid", "__bids", p)
-      // the batch side is batch-bounded by contract (batch ≪ corpus —
-      // the module's whole premise); broadcast it so the STORED bucket
-      // table is consumed map-side and never shuffled (a sort-merge
-      // join here would exchange the corpus-sized table per call)
-      // matched buckets are batch-bounded ROWS carrying the candidate
-      // mass as lists — exchange them (pinned width) BEFORE the double
-      // explode so pair generation parallelizes with the shuffle width
-      // instead of the bucket scan's split count (a small stored table
-      // scans as ONE task, and the explode of millions of candidate
-      // pairs must not run inside it)
-      val matched = broadcast(batchBuckets)
-        .join(index.buckets, Seq("band", "bucket"))
-        .select(col("__bids"), col("ids"))
-        .repartition(
-          batch.sparkSession.sessionState.conf.numShufflePartitions)
-      val pairs0 = matched
-        .select(explode(col("__bids")).as("batch_id"), col("ids"))
-        .select(col("batch_id"), explode(col("ids")).as("corpus_id"))
-        .distinct()
-      // pairs feed TWO consumers below (the sets prefilter and the
-      // verify join) — cache the batch-bounded table so candidate
-      // generation runs once; lazy mode recomputes it, the documented
-      // materialize = false price
-      val pairs =
-        if (materialize) pairs0
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else pairs0
-      try {
-        // both sides are shingles()-derived (distinct arrays) — the exact
-        // size-ratio prefilter (J ≥ t ⟹ min ≥ t·max) skips the per-pair
-        // set build for candidates the threshold already excludes; zero
-        // false drops, identical post-threshold result
-        val ba = batchSets.select(col(idCol).as("batch_id"), col("__shingles").as("__sa"))
-        // the stored `sets` table is corpus-sized — reduce it to the
-        // candidates MAP-SIDE (broadcast semi on the candidate corpus
-        // ids) instead of shuffling it whole into the verify join; the
-        // shuffle joins below then move only candidate-bounded rows,
-        // and the per-pair Jaccard work stays spread across shuffle
-        // partitions (a fully broadcast verify would run it inside the
-        // one-task scan of a small sets file)
-        val caCand = index.sets
-          .join(broadcast(pairs.select(col("corpus_id")).distinct()),
-            Seq("corpus_id"), "left_semi")
-          .select(col("corpus_id"), col("__shingles").as("__sb"))
-        val verified = pairs.join(ba, "batch_id").join(caCand, "corpus_id")
-          .filter(least(size(col("__sa")), size(col("__sb"))).cast("double") >=
-            lit(threshold) * greatest(size(col("__sa")), size(col("__sb"))))
-          .withColumn("jaccard",
-            graft.functions.JaccardDistinct.jaccardDistinct(col("__sa"), col("__sb")))
-          .filter(col("jaccard") >= threshold)
-          .select(col("batch_id"), col("corpus_id"), col("jaccard"))
-        if (materialize) verified.localCheckpoint(true) else verified
-      } finally {
-        if (materialize) pairs.unpersist()
-      }
-    } finally {
-      if (materialize) batchSets.unpersist()
-    }
+    // CPU-dense signing must not run at the batch's scan width (a
+    // one-file batch would sign in ONE task): the materialized path
+    // hash-exchanges the raw rows first, as Dedup.nearDuplicatesAgainst
+    // does; the lazy path keeps its plan
+    val signInput =
+      if (!materialize) batch
+      else batch.repartition(
+        batch.sparkSession.sessionState.conf.numShufflePartitions, col(idCol))
+    val batchBuckets = cappedBuckets(sets(signInput, "__bid"), "__bid", "__bids", p)
+    // the batch side is batch-bounded by contract (batch ≪ corpus —
+    // the module's whole premise); broadcast it so the STORED bucket
+    // table is consumed map-side and never shuffled (a sort-merge
+    // join here would exchange the corpus-sized table per call)
+    // matched buckets are batch-bounded ROWS carrying the candidate
+    // mass as lists — exchange them (pinned width) BEFORE the double
+    // explode so pair generation parallelizes with the shuffle width
+    // instead of the bucket scan's split count (a small stored table
+    // scans as ONE task, and the explode of millions of candidate
+    // pairs must not run inside it)
+    val matched = broadcast(batchBuckets)
+      .join(index.buckets, Seq("band", "bucket"))
+      .select(col("__bids"), col("ids"))
+      .repartition(
+        batch.sparkSession.sessionState.conf.numShufflePartitions)
+    // pairs feed TWO consumers below (the sets prefilter and the
+    // verify join); both read the one matched exchange above (exchange
+    // reuse), so the stored buckets are scanned once and only the
+    // explode runs twice
+    val pairs = matched
+      .select(explode(col("__bids")).as("batch_id"), col("ids"))
+      .select(col("batch_id"), explode(col("ids")).as("corpus_id"))
+      .distinct()
+    // both sides are shingles()-derived (distinct arrays) — the exact
+    // size-ratio prefilter (J ≥ t ⟹ min ≥ t·max) skips the per-pair
+    // set build for candidates the threshold already excludes; zero
+    // false drops, identical post-threshold result
+    val ba = sets(batch, "batch_id").withColumnRenamed("__shingles", "__sa")
+    // the stored `sets` table is corpus-sized — reduce it to the
+    // candidates MAP-SIDE (broadcast semi on the candidate corpus
+    // ids) instead of shuffling it whole into the verify join; the
+    // shuffle joins below then move only candidate-bounded rows,
+    // and the per-pair Jaccard work stays spread across shuffle
+    // partitions (a fully broadcast verify would run it inside the
+    // one-task scan of a small sets file)
+    val caCand = index.sets
+      .join(broadcast(pairs.select(col("corpus_id")).distinct()),
+        Seq("corpus_id"), "left_semi")
+      .select(col("corpus_id"), col("__shingles").as("__sb"))
+    pairs.join(ba, "batch_id").join(caCand, "corpus_id")
+      .filter(least(size(col("__sa")), size(col("__sb"))).cast("double") >=
+        lit(threshold) * greatest(size(col("__sa")), size(col("__sb"))))
+      .withColumn("jaccard",
+        graft.functions.JaccardDistinct.jaccardDistinct(col("__sa"), col("__sb")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
   }
 
   /** `batch` reduced to rows that duplicate nothing in the indexed
-    * corpus — [[Dedup.dedupAgainst]] through the index: exact
-    * fingerprint anti-join against `exact`, then near-dup anti-join via
-    * [[nearDuplicatesAgainst]]. Result is pinned equal to the direct
-    * path (DedupIndexSpec; q62 vs q50's oracle).
+    * corpus — [[Dedup.dedupAgainst]] through the index. Result is
+    * pinned equal to the direct path (DedupIndexSpec; q62 vs q50's
+    * oracle).
+    *
+    * With materialize = true (default; the shared
+    * [[Dedup.survivorsAgainst]]) every stored table is scanned once and
+    * none is shuffled:
+    *   - exact hits: ONE map-side pass over `exact`, semi-joined to the
+    *     broadcast batch fingerprints; the hit fingerprints (at most one
+    *     per batch row) are collected;
+    *   - near hits: the [[nearDuplicatesAgainst]] verify over the exact
+    *     survivors; its matched batch ids are collected, nothing is
+    *     checkpointed;
+    *   - the result is `batch` filtered by both hit sets. It holds no
+    *     join and no cached blocks and does not read the index, so it
+    *     stays valid after the index mutates (append, delete, compact).
+    * Collected state is bounded by the batch, the same contract the
+    * batch-side broadcasts rely on. materialize = false returns lazy
+    * anti-joins against `exact` and the near matches instead.
     */
   def dedupAgainst(
       batch: DataFrame, index: Index, idCol: String, textCol: String,
       threshold: Double = 0.8, materialize: Boolean = true): DataFrame = {
-    val key = TextStats.fingerprintMd5(col(textCol))
-    val exactSurvivors = batch.withColumn("__key", key)
-      .join(index.exact, Seq("__key"), "left_anti")
-      .drop("__key")
-    val nearMatched = nearDuplicatesAgainst(
-      exactSurvivors, index, idCol, textCol, threshold, materialize)
-      .select(col("batch_id").as(idCol)).distinct()
-    // near-matched ids are batch-bounded: broadcast the anti side so
-    // the survivors never shuffle
-    exactSurvivors.join(broadcast(nearMatched), Seq(idCol), "left_anti")
+    def verified(survivors: DataFrame) =
+      verifiedAgainst(survivors, index, idCol, textCol, threshold, materialize)
+    if (materialize)
+      Dedup.survivorsAgainst(batch, index.exact.select(col("__key")), idCol, textCol)(
+        s => Dedup.matchedBatchIds(verified(s)))
+    else
+      Dedup.lazySurvivorsAgainst(batch, index.exact, idCol, textCol)(verified)
   }
 }

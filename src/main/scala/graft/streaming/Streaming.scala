@@ -600,9 +600,11 @@ object Streaming {
           val spark = batch.sparkSession
           val idx = graft.dedup.DedupIndex.read(
             spark, indexPath, excludeSegments = Set(segName))
-          // pin survivors BEFORE the index mutates below: appendSegment
-          // re-executes the plan it is handed, and a lazy plan would
-          // re-list the segment tree it is about to extend
+          // the survivors are a filter over the micro-batch (the index
+          // hits are collected inside dedupAgainst), so they no longer
+          // read the index tree appendSegment extends below; pin them
+          // because they are consumed twice (survivor write + segment)
+          // and re-running the filter would re-derive the micro-batch
           val survivors = graft.dedup.DedupIndex
             .dedupAgainst(batch, idx, idCol, textCol, threshold)
             .localCheckpoint(true)

@@ -113,6 +113,127 @@ class DedupIndexSpec extends SparkSpec {
     }
   }
 
+  test("materialized dedupAgainst equals the lazy path and Dedup.dedupAgainst " +
+    "on randomized batches") {
+    import org.apache.spark.sql.DataFrame
+    type Id = Option[Any]
+    for (((stringIds, idCol), k) <- (for (s <- Seq(false, true);
+        c <- Seq("doc_id", "corpus_id", "batch_id")) yield (s, c)).zipWithIndex) {
+      val rng = new Random(101 + k)
+      val id: Long => Id = i => Some(if (stringIds) s"d$i" else i)
+      val base = (0L until 24L).map(i => id(i) -> Option(mkDoc(rng))) :+ (id(24L) -> Some(""))
+      val seg = (40L until 46L).map(i => id(i) -> Option(mkDoc(rng)))
+      val deleted = Seq(id(1L), id(2L), id(3L))
+      val texts = (base ++ seg).flatMap(_._2).filter(_.nonEmpty)
+      def copy() = texts(rng.nextInt(texts.size))
+      val drawn = (100L until 130L).map { i =>
+        id(i) -> Option(rng.nextInt(3) match {
+          case 0 => copy() // exact copy (of a base, segment or deleted doc)
+          case 1 => copy() + " omega" // near copy
+          case _ => mkDoc(rng)
+        })
+      }
+      val fresh = mkDoc(rng)
+      val batchRows = drawn ++ Seq(
+        id(200L) -> Some(fresh), id(201L) -> Some(fresh), // in-batch exact duplicates
+        id(202L) -> Some(drawn.head._2.get + " omega"),
+        id(203L) -> None, id(204L) -> Some(""), // null and empty text
+        None -> Some(copy()), None -> Some(copy() + " omega"), None -> Some(mkDoc(rng)))
+      def df(rows: Seq[(Id, Option[String])]): DataFrame =
+        if (stringIds) rows.map { case (i, t) => (i.map(_.asInstanceOf[String]), t) }
+          .toDF(idCol, "text")
+        else rows.map { case (i, t) => (i.map(_.asInstanceOf[Long]), t) }.toDF(idCol, "text")
+      val batch = df(batchRows)
+      def rows(out: DataFrame): Seq[(Option[String], Option[String])] =
+        out.select(idCol, "text").collect().toSeq
+          .map(r => (Option(r.get(0)).map(_.toString), Option(r.getString(1)))).sorted
+      def direct(corpus: DataFrame) = rows(Dedup.dedupAgainst(batch, corpus, idCol, "text",
+        shingleSize = 1, numHashes = 64, bands = 16, threshold = 0.9))
+      def viaIndex(idx: DedupIndex.Index, expected: Seq[(Option[String], Option[String])]) = {
+        rows(DedupIndex.dedupAgainst(batch, idx, idCol, "text", threshold = 0.9)) shouldBe expected
+        rows(DedupIndex.dedupAgainst(batch, idx, idCol, "text", threshold = 0.9,
+          materialize = false)) shouldBe expected
+      }
+
+      val baseDf = df(base)
+      val expected = direct(baseDf)
+      rows(Dedup.dedupAgainst(batch, baseDf, idCol, "text", shingleSize = 1,
+        numHashes = 64, bands = 16, threshold = 0.9, materialize = false)) shouldBe expected
+      // the fixture is discriminative: copies go, nulls and fresh rows stay
+      expected.size should be < batchRows.size - 4
+      expected should contain((Some(id(203L).get.toString), None))
+      expected.count(_._1.isEmpty) should be >= 1
+      expected.count(_._2.contains(fresh)) shouldBe 2
+
+      val path = Files.createTempDirectory("dedup_index_mixed_").toString
+      DedupIndex.write(baseDf, idCol, "text", path, params)
+      viaIndex(DedupIndex.read(spark, path), expected)
+      DedupIndex.appendSegment(spark, path, df(seg), idCol, "text")
+      DedupIndex.delete(path, df(deleted.map(d => (d, Option.empty[String]))).select(idCol))
+      val live = df(base ++ seg).filter(!col(idCol).isin(deleted.flatten: _*))
+      viaIndex(DedupIndex.read(spark, path), direct(live))
+    }
+  }
+
+  test("a materialized dedupAgainst over a read index retains no blocks and " +
+    "returns a join-free plan that does not read the index") {
+    val (corpus, batch0) = mkCorpusAndBatch(13)
+    val dir = Files.createTempDirectory("dedup_index_plan_").toString
+    batch0.write.parquet(s"$dir/batch")
+    val batch = spark.read.parquet(s"$dir/batch")
+    DedupIndex.write(corpus, "doc_id", "text", s"$dir/index", params)
+    val idx = DedupIndex.read(spark, s"$dir/index")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = DedupIndex.dedupAgainst(batch, idx, "doc_id", "text", threshold = 0.9)
+    spark.sparkContext.getPersistentRDDs.keySet shouldBe before
+    val plan = out.queryExecution.executedPlan.toString
+    plan should include(s"$dir/batch")
+    for (table <- Seq("exact", "buckets", "sets")) plan should not include s"$dir/index/$table"
+    plan should not include "Join"
+    plan should not include "InMemoryTableScan"
+    out.select("doc_id").collect().map(_.getLong(0)).toSet shouldBe
+      Dedup.dedupAgainst(batch, corpus, "doc_id", "text", shingleSize = 1,
+        numHashes = 64, bands = 16, threshold = 0.9)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+  }
+
+  test("job-count guard: one materialized dedupAgainst(...).count() over a " +
+    "read index") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (corpus, batch0) = mkCorpusAndBatch(17)
+    val dir = Files.createTempDirectory("dedup_index_jobs_").toString
+    batch0.write.parquet(s"$dir/batch")
+    val batch = spark.read.parquet(s"$dir/batch")
+    DedupIndex.write(corpus, "doc_id", "text", s"$dir/index", params)
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(
+        e.jobId -> Option(e.properties).map(_.getProperty("spark.job.description")).orNull)
+    }
+    // marker jobs bracket the call: listener events arrive asynchronously
+    // but in order, and job ids are sequential
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val idx = DedupIndex.read(spark, s"$dir/index")
+      marker("guard-start")
+      DedupIndex.dedupAgainst(batch, idx, "doc_id", "text", threshold = 0.9).count()
+      marker("guard-end")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def ids(name: String) = started.toArray.collect { case (i: Int, `name`) => i }
+      while (ids("guard-end").isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      val (from, to) = (ids("guard-start").head, ids("guard-end").head)
+      // 14 measured with the map-side exact scan, the cache-free near
+      // verify and the filter result (17 with the exact anti-join run
+      // twice and the checkpointed verify before them)
+      (to - from - 1) should be <= 14
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("query over a read index scans parquet, not corpus text") {
     val (corpus, batch) = mkCorpusAndBatch(5)
     val path = Files.createTempDirectory("dedup_index_spec_").toString
