@@ -2714,8 +2714,9 @@ object Queries {
         ORDER BY query_id, score DESC, vec_id""")),
 
     // The full S3 export pipeline (records/TfRecords.dfToTfRecord:
-    // vocab emission → spec projection → global orderBy(rand) shuffle →
-    // DISK_ONLY persist → gzip TFRecord part files → listing),
+    // vocab emission → spec projection → one hash exchange on a per-row
+    // rand key, sorted within partitions → gzip TFRecord part files →
+    // listing),
     // oracle-checked end-to-end: the export is read back through the
     // DSv2 source and must hold exactly the source rows (the oracle
     // compare is content-based over sorted rows, so the shuffle's

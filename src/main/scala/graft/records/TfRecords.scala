@@ -4,9 +4,8 @@ import java.net.URI
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.rand
+import org.apache.spark.sql.functions.{col, rand}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.Paths
 import graft.types._
@@ -24,13 +23,14 @@ import graft.types._
   *   - VarLen: null → omitted; empty list → present and empty;
   *   - FixedLen values must match the declared shape, else error.
   *
-  * 100 TB notes: the export pipeline is one global shuffle
-  * (`orderBy(rand)`) + one write pass, with DISK_ONLY persistence between
-  * them so the shuffle isn't recomputed by the write job; per-partition
-  * writers stream records (no buffering of the partition) and return
-  * (path, count) manifests collected driver-side — counts are
-  * vocabulary-sized metadata, not data. The per-record codec is compiled
-  * once per partition from (schema, specs): [[writeExamples]] and the
+  * 100 TB notes: the export pipeline is one hash exchange on a per-row
+  * random key, a sort within each partition and one write pass fused
+  * into the same stage: no range-bounds sample, no persistence, and the
+  * input is read once. Per-partition writers stream records (no
+  * buffering of the partition) and return (path, count) manifests
+  * collected driver-side — counts are vocabulary-sized metadata, not
+  * data. The per-record codec is compiled once per partition from
+  * (schema, specs): [[writeExamples]] and the
   * `tfrecord` source's flat-Example writer encode Spark's internal rows
   * with [[ExampleEncoder]], and the source's flat-Example reader decodes
   * straight into internal rows with [[ExampleDecoder]], so no record goes
@@ -118,11 +118,24 @@ object TfRecords {
 
   // ---- export pipeline (reference S3 `df_to_tf_record`, tfrecords.py:239-268) ----
 
-  /** Project spec columns, globally shuffle rows (`orderBy(rand(seed))` —
-    * training data should not be read in source order), persist DISK_ONLY
-    * so the shuffle feeds the write exactly once, write gzip TFRecords,
+  /** Project spec columns, shuffle the rows (training data should not be
+    * read in source order), write gzip TFRecords to `baseDir/tf_records`,
     * and list the produced files (skipping `_SUCCESS`-style entries).
     * Optionally emits vocabulary files for `vocabColumns` first.
+    *
+    * The shuffle is one hash exchange on a per-row `rand(seed)` key
+    * (`rand()` when `seed` is None) at `spark.sql.shuffle.partitions`,
+    * so adaptive execution may coalesce it, followed by a sort on the
+    * key within each partition. A row's key depends on (seed, input
+    * partition index, row position), so a given seed over the same
+    * input partitioning writes the same files; within a file rows are
+    * in key order. Rows identical in every spec column still get
+    * independent keys and spread over the files.
+    *
+    * Fails with an `IllegalArgumentException`, before anything is
+    * written, when `baseDir/tf_records` already exists (Spark's
+    * `ErrorIfExists`): part files of an earlier export would otherwise
+    * survive and be listed with the new ones.
     */
   def dfToTfRecord(
       df: DataFrame,
@@ -133,23 +146,27 @@ object TfRecords {
       seed: Option[Long] = None,
       requireHdfs: Boolean = true): Seq[String] = {
     val tfRecordDir = s"$baseDir/tf_records"
+    val fs = FileSystem.get(new URI(tfRecordDir), df.sparkSession.sparkContext.hadoopConfiguration)
+    if (fs.exists(new HPath(tfRecordDir)))
+      throw new IllegalArgumentException(s"$tfRecordDir already exists")
     if (vocabColumns.nonEmpty)
       graft.vocab.Vocabulary.genVocabFiles(
         df, vocabColumns, s"$baseDir/col_cardinalities", threshold)
 
-    val shuffled = df.select(filteredColumns(df, specs): _*)
-      .orderBy(seed.map(rand).getOrElse(rand()))
-      .persist(StorageLevel.DISK_ONLY)
-    try {
-      writeExamples(shuffled, specs, tfRecordDir, gzip = true, requireHdfs)
-      val fs = FileSystem.get(
-        new URI(tfRecordDir), df.sparkSession.sparkContext.hadoopConfiguration)
-      fs.listStatus(new HPath(tfRecordDir))
-        .map(_.getPath.toString)
-        .filterNot(p => p.substring(p.lastIndexOf('/') + 1).startsWith("_"))
-        .sorted
-        .toSeq
-    } finally shuffled.unpersist()
+    val projected = df.select(filteredColumns(df, specs): _*)
+    val taken = projected.columns.map(_.toLowerCase).toSet
+    val key = Iterator.iterate("_shuffle_key")("_" + _).find(k => !taken(k)).get
+    val shuffled = projected
+      .withColumn(key, seed.map(rand).getOrElse(rand()))
+      .repartition(col(key))
+      .sortWithinPartitions(key)
+      .drop(key)
+    writeExamples(shuffled, specs, tfRecordDir, gzip = true, requireHdfs)
+    fs.listStatus(new HPath(tfRecordDir))
+      .map(_.getPath.toString)
+      .filterNot(p => p.substring(p.lastIndexOf('/') + 1).startsWith("_"))
+      .sorted
+      .toSeq
   }
 
   // ---- sources (reference S4/S5, tfrecords.py:52-72) ----

@@ -199,39 +199,18 @@ class DedupIndexSpec extends SparkSpec {
 
   test("job-count guard: one materialized dedupAgainst(...).count() over a " +
     "read index") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (corpus, batch0) = mkCorpusAndBatch(17)
     val dir = Files.createTempDirectory("dedup_index_jobs_").toString
     batch0.write.parquet(s"$dir/batch")
     val batch = spark.read.parquet(s"$dir/batch")
     DedupIndex.write(corpus, "doc_id", "text", s"$dir/index", params)
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(
-        e.jobId -> Option(e.properties).map(_.getProperty("spark.job.description")).orNull)
-    }
-    // marker jobs bracket the call: listener events arrive asynchronously
-    // but in order, and job ids are sequential
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      val idx = DedupIndex.read(spark, s"$dir/index")
-      marker("guard-start")
+    val idx = DedupIndex.read(spark, s"$dir/index")
+    // 14 measured with the map-side exact scan, the cache-free near
+    // verify and the filter result (17 with the exact anti-join run
+    // twice and the checkpointed verify before them)
+    jobsStartedBy {
       DedupIndex.dedupAgainst(batch, idx, "doc_id", "text", threshold = 0.9).count()
-      marker("guard-end")
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      def ids(name: String) = started.toArray.collect { case (i: Int, `name`) => i }
-      while (ids("guard-end").isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
-      val (from, to) = (ids("guard-start").head, ids("guard-end").head)
-      // 14 measured with the map-side exact scan, the cache-free near
-      // verify and the filter result (17 with the exact anti-join run
-      // twice and the checkpointed verify before them)
-      (to - from - 1) should be <= 14
-    } finally sc.removeSparkListener(listener)
+    } should be <= 14
   }
 
   test("query over a read index scans parquet, not corpus text") {

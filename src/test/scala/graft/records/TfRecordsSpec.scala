@@ -50,10 +50,16 @@ class TfRecordsSpec extends SparkSpec {
     Paths.checkFullHdfsPath("relative/path") shouldBe false
   }
 
+  private def recordIds(files: Seq[String]): Seq[Seq[Long]] = files.map(f =>
+    TfRecords.readParsedTfr(Seq(f), specs, spark.sparkContext.hadoopConfiguration)
+      .map(_("id").asInstanceOf[Seq[Long]].head).toSeq)
+
   test("df_to_tf_record export pipeline round-trips through the distributed reader") {
     val dir = Files.createTempDirectory("export").toString
-    val df = (1L to 100L).map(i => (i, s"name$i", Seq(i, i * 2), "dropped"))
-      .toDF("id", "name", "vals", "not_in_spec")
+    // rows 101-105 are identical in every spec column
+    val input = (1L to 100L).map(i => (i, s"name$i", Seq(i, i * 2), "dropped")) ++
+      (1 to 5).map(i => (0L, "dup", Seq(0L), s"dropped$i"))
+    val df = input.toDF("id", "name", "vals", "not_in_spec")
     val files = TfRecords.dfToTfRecord(
       df, specs, dir, vocabColumns = Seq("name"), threshold = 0,
       seed = Some(42L), requireHdfs = false)
@@ -65,16 +71,69 @@ class TfRecordsSpec extends SparkSpec {
 
     val back = TfRecords.readExamplesDf(spark, s"$dir/tf_records/part-*", specs)
     back.schema.fieldNames.toSeq shouldBe Seq("id", "name", "vals")
-    back.count() shouldBe 100L
+    back.count() shouldBe 105L
     val rows = back.collect().map(r =>
       (r.getLong(r.fieldIndex("id")), r.getString(r.fieldIndex("name")),
         r.getSeq[Long](r.fieldIndex("vals")))).toSeq
-    rows.map(_._1).sorted shouldBe (1L to 100L)
+    // the read-back multiset is the input's, duplicates included
+    rows.sortBy(_._1) shouldBe input.map(r => (r._1, r._2, r._3)).sortBy(_._1)
     val r5 = rows.find(_._1 == 5L).get
     r5._2 shouldBe "name5"
     r5._3 shouldBe Seq(5L, 10L)
     // the export shuffled: output order differs from source order
-    rows.map(_._1) should not be (1L to 100L)
+    val order = recordIds(files)
+    order.flatten should not be input.map(_._1)
+
+    // the same seed over the same input partitioning writes the same
+    // files, byte for byte; another seed writes another order
+    def export(seed: Long): Seq[String] = TfRecords.dfToTfRecord(
+      df, specs, Files.createTempDirectory("export").toString,
+      seed = Some(seed), requireHdfs = false)
+    def bytes(f: String) = Files.readAllBytes(java.nio.file.Paths.get(new java.net.URI(f)))
+    val again = export(42L)
+    again.map(f => f.substring(f.lastIndexOf('/') + 1)) shouldBe
+      files.map(f => f.substring(f.lastIndexOf('/') + 1))
+    files.zip(again).foreach { case (a, b) => bytes(a) shouldBe bytes(b) }
+    recordIds(export(43L)).flatten should not be order.flatten
+  }
+
+  test("df_to_tf_record spreads rows identical in every spec column over part files") {
+    // without coalescing, the tiny input keeps its 4 shuffle partitions;
+    // a key that is a function of the row would put every row in one file
+    val conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prior = spark.conf.getOption(conf)
+    spark.conf.set(conf, "false")
+    try {
+      val df = Seq.fill(200)((1L, "same", Seq(1L))).toDF("id", "name", "vals")
+      val files = TfRecords.dfToTfRecord(df, specs,
+        Files.createTempDirectory("export").toString, seed = Some(1L), requireHdfs = false)
+      val perFile = recordIds(files).map(_.size)
+      perFile.sum shouldBe 200
+      perFile.count(_ > 0) should be > 1
+    } finally prior.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
+
+  test("df_to_tf_record fails before writing anything when tf_records exists") {
+    val dir = Files.createTempDirectory("export")
+    val stray = Files.createDirectories(dir.resolve("tf_records")).resolve("part-00099")
+    Files.write(stray, Array[Byte](1, 2, 3))
+    val df = Seq((1L, "a", Seq(1L))).toDF("id", "name", "vals")
+    val e = the[IllegalArgumentException] thrownBy TfRecords.dfToTfRecord(
+      df, specs, dir.toString, vocabColumns = Seq("name"), seed = Some(1L),
+      requireHdfs = false)
+    e.getMessage should include(dir.resolve("tf_records").toString)
+    Files.exists(dir.resolve("col_cardinalities")) shouldBe false
+    Files.list(dir.resolve("tf_records")).toArray.toSeq shouldBe Seq(stray)
+    Files.readAllBytes(stray).toSeq shouldBe Seq[Byte](1, 2, 3)
+  }
+
+  test("df_to_tf_record without vocabulary columns starts at most 2 jobs") {
+    val df = (1L to 50L).map(i => (i, s"name$i", Seq(i))).toDF("id", "name", "vals")
+    val dir = Files.createTempDirectory("export").toString
+    // the shuffle map stage, then one job that sorts, encodes and writes
+    jobsStartedBy {
+      TfRecords.dfToTfRecord(df, specs, dir, seed = Some(1L), requireHdfs = false)
+    } should be <= 2
   }
 
   // --- ragged → COO (`test_numpy_to_sparse_tensors.py:8-56`) ---
