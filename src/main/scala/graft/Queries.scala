@@ -193,7 +193,7 @@ object Queries {
     // ---- pytorch/spark_inference.py + common/spark_inference.py) ----
 
     // Linear scoring over the embeddings table through the real operator
-    // (broadcast artifact + batched mapPartitions). Weights w_i = i+1; the
+    // (broadcast artifact + batched InferenceColumn). Weights w_i = i+1; the
     // score is a sequential left fold in double, which DuckDB reproduces
     // bit-exactly with list_reduce(list_transform(...)) — 1-based lambda
     // index there matches the 0-based (i+1) here.

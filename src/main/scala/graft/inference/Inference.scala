@@ -5,7 +5,9 @@ import java.util.UUID
 import java.util.concurrent.{ArrayBlockingQueue, Executors, Future => JFuture, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{DataType, FloatType}
 
 /** Model-scoring column operators — the reference's reason to exist
@@ -15,19 +17,23 @@ import org.apache.spark.sql.types.{DataType, FloatType}
   * `tensorflow/dataframe_prediction_helper.py:189-256` and
   * `sklearn/spark_inference.py:10-55` Spark-first: instead of a pandas UDF
   * behind an Arrow boundary wrapped in `explode(array(udf))` to defeat
-  * SPARK-17728 recomputation, scoring is a `mapPartitions` over rows.
-  * That gives the compute-once contract by construction (the column is
-  * materialized exactly once per row), deletes the JVM↔Python worker
-  * boundary entirely, and streams with bounded memory: rows are pulled
-  * through `grouped(batchSize)` so at most one batch per task is resident.
+  * SPARK-17728 recomputation, scoring is a Catalyst operator
+  * ([[InferenceColumn]]) over Spark's internal rows. That gives the
+  * compute-once contract by construction (the column is materialized
+  * exactly once per row), deletes the JVM↔Python worker boundary
+  * entirely, and streams with bounded memory: rows are pulled through
+  * `grouped(batchSize)` so at most one batch per task is resident.
   *
   * 100 TB design notes:
   *   - model artifacts are broadcast refs loaded once per executor
   *     ([[ArtifactCache]]), never per task;
   *   - the scoring pass is map-only — no shuffle, no driver involvement;
-  *   - `mapPartitions` is an analysis barrier for Catalyst, so callers
-  *     should `select` the columns they need downstream *before* scoring
-  *     (the reference has the same property across its UDF boundary);
+  *   - only the input columns are decoded to Scala values; every other
+  *     column stays in Spark's row format, and the output is appended
+  *     with one projection;
+  *   - unread columns are pruned below scoring: the operator declares
+  *     its input columns, so a `select` after scoring narrows the scan
+  *     to those plus the selected ones;
   *   - batchSize bounds peak memory per task; raise it for small rows to
   *     amortize model-call overhead (the reference defaults to 1 and
   *     tells callers to raise it — we keep the same default).
@@ -87,32 +93,16 @@ object Inference {
       batchSize: Int = 1,
       outputCol: String = "prediction",
       numThreads: Int = 8,
-      gpus: GpuConf = GpuConf.none): DataFrame = {
-    require(inputCols.nonEmpty, "at least one input column is required")
-    val schema = df.schema
-    val idx = inputCols.map(schema.fieldIndex)
-    val outSchema = schema.add(outputCol, outputType, nullable = true)
-    df.mapPartitions { rows =>
-      ThreadPinning.pinOnce(numThreads)
-      val device = gpus.device()
-      val a = artifacts.get
-      rows.grouped(batchSize).flatMap { batch =>
-        val cols: Seq[IndexedSeq[Any]] =
-          idx.map(i => batch.iterator.map(_.get(i)).toIndexedSeq)
-        val out = inferenceFn(a, cols, device)
-        require(out.size == batch.size,
-          s"inference fn returned ${out.size} results for a batch of ${batch.size} rows")
-        batch.iterator.zip(out.iterator).map { case (r, p) => Row.fromSeq(r.toSeq :+ p) }
-      }
-    }(Encoders.row(outSchema))
-  }
+      gpus: GpuConf = GpuConf.none): DataFrame =
+    scoreColumn(df, artifacts, inputCols, outputType, outputCol, numThreads, gpus) {
+      (a, device, rows) => inBatches(rows, batchSize)(cols => inferenceFn(a, cols, device))
+    }
 
   /** Inference with parallel per-row preprocessing (reference U6:
     * `with_inference_column_and_preprocessing`). Preprocessing runs on a
-    * bounded worker pool ahead of the scoring loop — the `mapPartitions`
-    * analogue of the reference's DataLoader(num_workers, prefetch_factor=2,
-    * timeout) — and each batch's scoring is retried on transient
-    * RuntimeExceptions.
+    * bounded worker pool ahead of the scoring loop — the analogue of the
+    * reference's DataLoader(num_workers, prefetch_factor=2, timeout) —
+    * and each batch's scoring is retried on transient RuntimeExceptions.
     *
     * Divergence from the reference, documented: its `_with_retry` compares
     * against a hardcoded `n_try > 3` so `max_retry` only bounds the loop
@@ -132,34 +122,49 @@ object Inference {
       numWorkersPreprocessing: Int = 8,
       preprocessingTimeout: java.time.Duration = java.time.Duration.ofSeconds(60),
       maxRetry: Int = 3,
-      gpus: GpuConf = GpuConf.none): DataFrame = {
+      gpus: GpuConf = GpuConf.none): DataFrame =
+    scoreColumn(df, artifacts, inputCols, outputType, outputCol, numThreads, gpus) {
+      (a, device, rows) =>
+        val pre = parallelMap(rows, numWorkersPreprocessing,
+          prefetch = math.max(2 * batchSize, 2), preprocessingTimeout)(
+          f => preprocessing(a, f, device).toIndexedSeq)
+        inBatches(pre, batchSize)(cols => Retry.withRetry(maxRetry)(inferenceFn(a, cols, device)))
+    }
+
+  /** The scoring core both operators share: `df` with `outputCol`
+    * appended through an [[InferenceColumn]] node. `scorePartition` gets
+    * the artifacts, the device and the input-column values of each row of
+    * one partition, and returns one output per row, in order.
+    */
+  private def scoreColumn[A](
+      df: DataFrame,
+      artifacts: ArtifactHandle[A],
+      inputCols: Seq[String],
+      outputType: DataType,
+      outputCol: String,
+      numThreads: Int,
+      gpus: GpuConf)(
+      scorePartition: (A, String, Iterator[IndexedSeq[Any]]) => Iterator[Any]): DataFrame = {
     require(inputCols.nonEmpty, "at least one input column is required")
-    val schema = df.schema
-    val idx = inputCols.map(schema.fieldIndex)
-    val outSchema = schema.add(outputCol, outputType, nullable = true)
-    df.mapPartitions { rows =>
+    InferenceColumn.append(df, inputCols, outputCol, outputType) { rows =>
       ThreadPinning.pinOnce(numThreads)
       val device = gpus.device()
-      val a = artifacts.get
-      val features = rows.map(r => idx.map(r.get).toIndexedSeq)
-      val pre = parallelMap(features, numWorkersPreprocessing,
-        prefetch = math.max(2 * batchSize, 2), preprocessingTimeout)(
-        f => (f, preprocessing(a, f, device).toIndexedSeq))
-      pre.grouped(batchSize).flatMap { batch =>
-        val out = Retry.withRetry(maxRetry) {
-          val width = batch.head._2.size
-          val cols: Seq[IndexedSeq[Any]] =
-            (0 until width).map(i => batch.map(_._2(i)).toIndexedSeq)
-          inferenceFn(a, cols, device)
-        }
-        require(out.size == batch.size,
-          s"inference fn returned ${out.size} results for a batch of ${batch.size} rows")
-        batch.iterator.zip(out.iterator).map { case ((raw, _), p) =>
-          Row.fromSeq(raw :+ p)
-        }
-      }
-    }(Encoders.row(outSchema))
+      scorePartition(artifacts.get, device, rows)
+    }
   }
+
+  /** Scores `rows` `batchSize` at a time: `score` gets one column vector
+    * per feature of a batch and must return one output per row.
+    */
+  private def inBatches(rows: Iterator[IndexedSeq[Any]], batchSize: Int)(
+      score: Seq[IndexedSeq[Any]] => Seq[Any]): Iterator[Any] =
+    rows.grouped(batchSize).flatMap { batch =>
+      val rs = batch.toArray
+      val out = score(rs(0).indices.map(i => ArraySeq.unsafeWrapArray(rs.map(_(i)))))
+      require(out.size == rs.length,
+        s"inference fn returned ${out.size} results for a batch of ${rs.length} rows")
+      out
+    }
 
   /** All-columns probability scoring (reference U7, the sklearn shape:
     * `sklearn/spark_inference.py:10-55`): the model sees every column of

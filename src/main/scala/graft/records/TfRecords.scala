@@ -135,7 +135,9 @@ object TfRecords {
     * Fails with an `IllegalArgumentException`, before anything is
     * written, when `baseDir/tf_records` already exists (Spark's
     * `ErrorIfExists`): part files of an earlier export would otherwise
-    * survive and be listed with the new ones.
+    * survive and be listed with the new ones. With `requireHdfs`, a
+    * `baseDir` that is not a full HDFS path fails at the same point, so
+    * no vocabulary file is left behind.
     */
   def dfToTfRecord(
       df: DataFrame,
@@ -146,6 +148,8 @@ object TfRecords {
       seed: Option[Long] = None,
       requireHdfs: Boolean = true): Seq[String] = {
     val tfRecordDir = s"$baseDir/tf_records"
+    if (requireHdfs && !Paths.checkFullHdfsPath(tfRecordDir))
+      throw new IllegalArgumentException(s"$tfRecordDir is not a full hdfs path")
     val fs = FileSystem.get(new URI(tfRecordDir), df.sparkSession.sparkContext.hadoopConfiguration)
     if (fs.exists(new HPath(tfRecordDir)))
       throw new IllegalArgumentException(s"$tfRecordDir already exists")

@@ -177,6 +177,21 @@ class InferenceSpec extends SparkSpec {
     InferenceSpecState.inferenceCalls.get() shouldBe 1
   }
 
+  test("preprocessing over a subset of the columns keeps every column") {
+    val df = Seq((1L, 2.0, "a"), (2L, 3.5, "b")).toDF("id", "x", "tag")
+    val model = Artifacts.broadcast(spark, 1.0)
+    val preprocess: Inference.PreprocessFn[Double] = (_, features, _) =>
+      Seq(features(0).asInstanceOf[Double] * 2)
+    val fn: Inference.InferenceFn[Double] = (m, cols, _) =>
+      cols(0).map(_.asInstanceOf[Double] + m)
+    val out = Inference.withInferenceColumnAndPreprocessing(
+      df, model, Seq("x"), preprocess, fn, DoubleType, batchSize = 2,
+      outputCol = "p", numThreads = 1, numWorkersPreprocessing = 2)
+    out.schema.fieldNames.toSeq shouldBe Seq("id", "x", "tag", "p")
+    out.collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2), r.getDouble(3)))
+      .sortBy(_._1).toSeq shouldBe Seq((1L, 2.0, "a", 5.0), (2L, 3.5, "b", 8.0))
+  }
+
   // reference `test_with_retry`: failing fn logs maxRetry times, then raises
   test("withRetry retries maxRetry times then rethrows") {
     val errors = new AtomicInteger(0)
@@ -242,6 +257,47 @@ class InferenceSpec extends SparkSpec {
     an[IllegalArgumentException] should be thrownBy {
       Inference.withPredictProbaColumn[Models.Logistic](df, null,
         (m, names, cols) => m.predictProba(names, cols.map(_.toIndexedSeq)))
+    }
+  }
+
+  test("Logistic.predictProba equals the per-row formula bit for bit") {
+    // the per-row form Logistic used before resolving coefficients per batch
+    def reference(m: Models.Logistic, columns: Seq[String], rows: Seq[IndexedSeq[Any]]) = {
+      val nRows = if (rows.isEmpty) 0 else rows.head.size
+      (0 until nRows).map { r =>
+        val z = m.intercept + columns.zipWithIndex.map { case (c, i) =>
+          m.coef.getOrElse(c, 0.0) * rows(i)(r).asInstanceOf[Number].doubleValue()
+        }.sum
+        val p1 = 1.0 / (1.0 + math.exp(-z))
+        Array(1.0 - p1, p1)
+      }
+    }
+    val rnd = new scala.util.Random(17)
+    val special = Seq(Double.NaN, 0.0, -0.0, Double.PositiveInfinity, Double.NegativeInfinity, 1e300)
+    def value(): Any = rnd.nextInt(6) match {
+      case 0 => special(rnd.nextInt(special.size))
+      case 1 => rnd.nextFloat() * 8 - 4
+      case 2 => rnd.nextLong() % 1000
+      case 3 => rnd.nextInt(50) - 25
+      case _ => rnd.nextGaussian() * 3
+    }
+    val names = Seq("a", "b", "c", "d")
+    for {
+      coef <- Seq(Map("a" -> 0.8, "b" -> -0.5, "c" -> 0.0), Map("a" -> -0.0, "d" -> 1e-3), Map.empty[String, Double])
+      intercept <- Seq(0.3, 0.0, -0.0)
+      columns <- Seq(names, names.toIndexedSeq, names.take(1))
+    } {
+      val m = Models.Logistic(coef, intercept)
+      val rows = columns.map(_ => IndexedSeq.fill(64)(value()))
+      val got = m.predictProba(columns, rows)
+      val want = reference(m, columns, rows)
+      got.size shouldBe want.size
+      // doubleToLongBits: the sign of a NaN follows operand order, which
+      // the JIT may swap in a commutative add, so every NaN counts as one
+      got.zip(want).foreach { case (g, w) =>
+        g.map(java.lang.Double.doubleToLongBits).toSeq shouldBe
+          w.map(java.lang.Double.doubleToLongBits).toSeq
+      }
     }
   }
 

@@ -127,6 +127,16 @@ class TfRecordsSpec extends SparkSpec {
     Files.readAllBytes(stray).toSeq shouldBe Seq[Byte](1, 2, 3)
   }
 
+  test("df_to_tf_record rejects a non-hdfs path before writing vocabulary files") {
+    val dir = Files.createTempDirectory("export")
+    val df = Seq((1L, "a", Seq(1L))).toDF("id", "name", "vals")
+    val e = the[IllegalArgumentException] thrownBy TfRecords.dfToTfRecord(
+      df, specs, dir.toString, vocabColumns = Seq("name"), seed = Some(1L))
+    e.getMessage should include("not a full hdfs path")
+    Files.exists(dir.resolve("col_cardinalities").resolve("name.voc")) shouldBe false
+    Files.list(dir).toArray.toSeq shouldBe empty
+  }
+
   test("df_to_tf_record without vocabulary columns starts at most 2 jobs") {
     val df = (1L to 50L).map(i => (i, s"name$i", Seq(i))).toDF("id", "name", "vals")
     val dir = Files.createTempDirectory("export").toString
