@@ -556,22 +556,40 @@ object DedupIndex {
     * counts of the served tables after tombstone exclusion. One row
     * per statistic, all exact counts (q251 pins them against DuckDB
     * recomputing the same quantities from the raw corpus slices).
+    *
+    * Sources: `segments_pending` is the served segment directories.
+    * With no tombstone pending, the stored rows are the live rows, so
+    * `exact_rows` and `sets_rows` are the Parquet footer row counts of
+    * the served `exact` and `sets` tables — no Spark job with a warm
+    * `meta` cache. With tombstones pending, `tombstones_pending` counts
+    * the distinct pending ids and both row counts `count()` the
+    * tombstone-masked read (one job each).
     */
   def stats(spark: SparkSession, path: String): DataFrame =
     // resolve-then-count is eager, so a compact racing this call can
-    // GC a resolved segment mid-count — retry re-resolves to the
-    // committed generation holding the same rows
+    // GC a resolved segment (or a footer) mid-count — retry re-resolves
+    // to the committed generation holding the same rows
     graft.core.Generations.retryOnLostSegments() {
       import spark.implicits._
-      val idx = read(spark, path)
-      val nSegments = servedSegmentDirs(spark, path).size.toLong
-      val nTombstones =
-        tombstones(spark, path).map(_.distinct().count()).getOrElse(0L)
+      readParams(spark, path) // a malformed index fails here, as read() would
+      val roots = servedRoots(spark, path)
+      val (nTombstones, exactRows, setsRows) = tombstones(spark, path) match {
+        case None =>
+          def footerRows(sub: String): Long = {
+            val dirs = roots.map(r => s"$r/$sub")
+            graft.core.ParquetMeta.pinnedSchema(spark, dirs) // one-writer guard
+            graft.core.ParquetMeta.rowCount(spark, dirs)
+          }
+          (0L, footerRows("exact"), footerRows("sets"))
+        case Some(t) =>
+          val idx = read(spark, path)
+          (t.distinct().count(), idx.exact.count(), idx.sets.count())
+      }
       Seq(
-        ("segments_pending", nSegments),
+        ("segments_pending", (roots.size - 1).toLong),
         ("tombstones_pending", nTombstones),
-        ("exact_rows", idx.exact.count()),
-        ("sets_rows", idx.sets.count()))
+        ("exact_rows", exactRows),
+        ("sets_rows", setsRows))
         .toDF("stat", "value")
     }
 
@@ -662,6 +680,30 @@ object DedupIndex {
       spark: SparkSession, path: String,
       excludeSegments: Set[String] = Set.empty): Index = {
     val params = readParams(spark, path)
+    val roots = servedRoots(spark, path, excludeSegments)
+    // one pinned-schema multi-path relation per table instead of a
+    // unionByName of per-root scans: same rows (all roots share one
+    // writer), ~4x cheaper on the driver (schema inference + N
+    // relations were ~70% of this call's wall clock)
+    def union(sub: String): DataFrame =
+      graft.core.ParquetMeta.readPinned(spark, roots.map(r => s"$r/$sub"))
+    val exact = union("exact")
+    // pending deletes exclusion-filter the id-carrying tables; the
+    // bucket lists stay as-stored (candidates only — a tombstoned
+    // candidate dies in the verify join against the filtered sets)
+    // until compact purges them physically
+    val tomb = tombstones(spark, path)
+    Index(params, antiTombstones(exact, tomb), union("buckets"),
+      antiTombstones(union("sets"), tomb))
+  }
+
+  /** The root directories a read serves — the served base first, then
+    * each served segment not in `excludeSegments` — after the
+    * crashed-compact and table-format guards every read shares.
+    */
+  private def servedRoots(
+      spark: SparkSession, path: String,
+      excludeSegments: Set[String] = Set.empty): Seq[String] = {
     // a compaction crashed after its swaps but before the segments/
     // tombstones cleanup would union already-merged rows with their
     // still-live segment copies — fail loud. Recovery: if any *_old
@@ -694,20 +736,7 @@ object DedupIndex {
         s"dedup index table $r/exact uses the pre-delete layout " +
           "(fingerprints without corpus ids) — rebuild the index with " +
           "DedupIndex.write to enable tombstone deletes and reads")
-    // one pinned-schema multi-path relation per table instead of a
-    // unionByName of per-root scans: same rows (all roots share one
-    // writer), ~4x cheaper on the driver (schema inference + N
-    // relations were ~70% of this call's wall clock)
-    def union(sub: String): DataFrame =
-      graft.core.ParquetMeta.readPinned(spark, roots.map(r => s"$r/$sub"))
-    val exact = union("exact")
-    // pending deletes exclusion-filter the id-carrying tables; the
-    // bucket lists stay as-stored (candidates only — a tombstoned
-    // candidate dies in the verify join against the filtered sets)
-    // until compact purges them physically
-    val tomb = tombstones(spark, path)
-    Index(params, antiTombstones(exact, tomb), union("buckets"),
-      antiTombstones(union("sets"), tomb))
+    roots
   }
 
   /** Near-duplicate matches of `batch` against the indexed corpus —

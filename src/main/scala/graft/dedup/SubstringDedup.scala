@@ -463,25 +463,33 @@ object SubstringDedup {
   /** Operational stats — [[DedupIndex.stats]] for the substring index:
     * segments a read unions, tombstones pending physical purge, live
     * (tombstone-excluded) fingerprint rows and distinct documents.
-    * One count + one distinct aggregate over the served table; q257
-    * pins every number against DuckDB replaying the winnowing chain.
+    * Sources: `distinct_docs` is one distinct aggregate over the served
+    * table. With no tombstone pending, `fingerprint_rows` is the
+    * Parquet footer row count of the served `fingerprints` tables (no
+    * job); with tombstones pending it is a `count()` of the masked
+    * read, and `tombstones_pending` counts the distinct pending ids.
+    * q257 pins every number against DuckDB replaying the winnowing
+    * chain.
     */
   def fingerprintIndexStats(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     // resolve-then-count is eager, so a compact racing this call can
-    // GC a resolved segment mid-count — retry re-resolves to the
-    // committed generation holding the same rows
+    // GC a resolved segment (or a footer) mid-count — retry re-resolves
+    // to the committed generation holding the same rows
     graft.core.Generations.retryOnLostSegments() {
       import spark.implicits._
       val served = storedFingerprints(spark, path)
-      val nSegments = (fingerprintRoots(spark, path).size - 1).toLong
-      val nTombstones =
-        tombstones(spark, path).map(_.distinct().count()).getOrElse(0L)
+      val roots = fingerprintRoots(spark, path)
+      val (nTombstones, rows) = tombstones(spark, path) match {
+        case None =>
+          (0L, graft.core.ParquetMeta.rowCount(spark, roots.map(r => s"$r/fingerprints")))
+        case Some(t) => (t.distinct().count(), served.count())
+      }
       Seq(
         ("distinct_docs",
           served.select(col("corpus_id")).distinct().count()),
-        ("fingerprint_rows", served.count()),
-        ("segments_pending", nSegments),
+        ("fingerprint_rows", rows),
+        ("segments_pending", (roots.size - 1).toLong),
         ("tombstones_pending", nTombstones))
         .toDF("stat", "value")
     }

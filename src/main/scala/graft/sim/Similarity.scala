@@ -40,6 +40,14 @@ object Similarity {
     math.sqrt(acc)
   }
 
+  /** [[norm]] over a primitive array (same fold, no boxing). */
+  private def normOf(a: Array[Float]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < a.length) { acc += a(i).toDouble * a(i).toDouble; i += 1 }
+    math.sqrt(acc)
+  }
+
   def cosine(a: collection.Seq[Float], b: collection.Seq[Float]): Double = {
     val d = norm(a) * norm(b)
     if (d == 0.0) 0.0 else dot(a, b) / d
@@ -278,6 +286,21 @@ object Similarity {
     */
   def readIvfIndex(
       spark: SparkSession, path: String, idCol: String, vecCol: String): IvfIndex = {
+    // one pinned-schema relation per root over base + segments
+    // instead of inferring each root's schema (all roots share one
+    // writer/schema; cell stays a partition column, so the probe-time
+    // cell filter partition-prunes every root exactly as before) —
+    // per-root schema inference was the dominant driver cost here
+    val assigned = graft.core.ParquetMeta.readPinned(
+      spark, servedAssignedRoots(spark, path), partitionCols = cellPartitionCol)
+    IvfIndex(assigned, readIvfCentroids(spark, path), idCol, vecCol)
+  }
+
+  /** The `assigned` directories a read serves — the base first, then
+    * each served segment's — after the fail-loud maintenance-marker
+    * guards every read path shares.
+    */
+  private def servedAssignedRoots(spark: SparkSession, path: String): Seq[String] = {
     // a retrain crashed between its assigned/centroids swaps leaves a
     // GEOMETRICALLY inconsistent index (new cells, old centroid table)
     // that would answer probes plausibly but wrong — fail loud instead
@@ -305,17 +328,50 @@ object Similarity {
     // generation (its manifest excludes the segments it folded —
     // present only in the crash window before their eager GC);
     // legacy flat layout when no compaction has upgraded the tree
-    // one pinned-schema multi-path relation over base + segments
-    // instead of a unionByName of per-root scans (all roots share one
-    // writer/schema; cell stays a partition column, so the probe-time
-    // cell filter partition-prunes every root exactly as before) —
-    // per-root schema inference was the dominant driver cost here
-    val assigned = graft.core.ParquetMeta.readPinned(
-      spark,
-      servedAssignedDir(spark, path) +:
-        servedSegmentDirs(spark, path).map(r => s"$r/assigned"),
-      partitionCols = cellPartitionCol)
-    IvfIndex(assigned, readIvfCentroids(spark, path), idCol, vecCol)
+    servedAssignedDir(spark, path) +:
+      servedSegmentDirs(spark, path).map(r => s"$r/assigned")
+  }
+
+  /** Served shape of an on-disk IVF index: segment count, base rows,
+    * segment rows and rows per cell.
+    */
+  private final case class ServedCells(
+      segments: Int, baseRows: Long, segmentRows: Long, perCell: Map[Int, Long])
+
+  /** [[ServedCells]] of the index at `path`. Every `assigned` table is
+    * written `partitionBy("cell")` and IVF has no tombstones (deletion
+    * rewrites the cell files), so the Parquet footers of the `cell=N`
+    * directories hold exactly the served counts: no Spark job. Falls
+    * back to a scan (a count per base and segment side plus a per-cell
+    * aggregation) when a root holds rows outside a `cell=N` directory.
+    */
+  private def servedCells(spark: SparkSession, path: String): ServedCells = {
+    val roots = servedAssignedRoots(spark, path)
+    val footerCells = roots.map { r =>
+      val counts = graft.core.ParquetMeta.partitionRowCounts(spark, r)
+        .filter(_._2 > 0L).toSeq
+      val cells = counts.flatMap { case (dir, n) =>
+        (if (dir.startsWith("cell=")) dir.stripPrefix("cell=").toIntOption
+         else None).map(_ -> n)
+      }
+      if (cells.size == counts.size) Some(cells.toMap) else None
+    }
+    if (footerCells.forall(_.isDefined)) {
+      // the one-writer guard the scan path's pinned read applies
+      graft.core.ParquetMeta.pinnedSchema(spark, roots)
+      val perRoot = footerCells.flatten
+      ServedCells(roots.size - 1, perRoot.head.values.sum, perRoot.tail.map(_.values.sum).sum,
+        perRoot.flatten.groupMapReduce(_._1)(_._2)(_ + _))
+    } else {
+      def read(dirs: Seq[String]) = graft.core.ParquetMeta.readPinned(
+        spark, dirs, partitionCols = cellPartitionCol)
+      ServedCells(
+        roots.size - 1,
+        read(roots.take(1)).count(),
+        if (roots.size == 1) 0L else read(roots.tail).count(),
+        read(roots).groupBy(col("cell")).count()
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap) // <= nCells
+    }
   }
 
   /** The stored centroid table of an on-disk index (nCells rows —
@@ -436,51 +492,44 @@ object Similarity {
     *     same way drifted appends do); reset by
     *     [[compactIvfIndexWithRetrain]].
     *
-    * Cost: one count per root table plus ONE histogram aggregation
-    * (nCells rows — never a row-level shuffle); the driver-side fold
-    * is bounded by nCells. q253 pins every number against DuckDB
+    * Sources: `n_cells` is the centroid table's size;
+    * `segments_pending` the served segment directories; `base_rows`,
+    * `segment_rows` and the per-cell histogram come from the Parquet
+    * footers of the `cell=N` directories ([[servedCells]]: exact, since
+    * IVF has no tombstones; a scan only for a root with rows outside a
+    * `cell=N` directory); `deleted_since_retrain` sums the journal (one
+    * job when the journal exists). So with warm parameter caches and no
+    * journal the readout starts no Spark job; the driver-side fold is
+    * bounded by nCells. q253 pins every number against DuckDB
     * replaying the assignment and the same integer arithmetic.
     */
   def ivfStats(
       spark: SparkSession, path: String,
       idCol: String, vecCol: String): DataFrame =
     // resolve-then-count is eager, so a compact racing this call can
-    // GC a resolved segment mid-count — retry re-resolves to the
-    // committed generation holding the same rows
+    // GC a resolved segment (or a footer) mid-count — retry re-resolves
+    // to the committed generation holding the same rows
     graft.core.Generations.retryOnLostSegments() {
     import spark.implicits._
     val centroids = readIvfCentroids(spark, path)
     val nCells = centroids.size.toLong
     // SERVED segments only: directories folded into the latest
-    // committed generation are dead (crash window before eager GC)
-    val segs = servedSegmentDirs(spark, path)
-    // marker guards apply (readIvfIndex fails loud mid-maintenance)
-    val served = readIvfIndex(spark, path, idCol, vecCol).assigned
-    // pinned-schema reads; all segments counted in ONE multi-path job
-    // instead of one count job per segment
-    val baseRows = graft.core.ParquetMeta.readPinned(
-      spark, Seq(servedAssignedDir(spark, path)),
-      partitionCols = cellPartitionCol).count()
-    val segRows =
-      if (segs.isEmpty) 0L
-      else graft.core.ParquetMeta.readPinned(
-        spark, segs.map(r => s"$r/assigned"),
-        partitionCols = cellPartitionCol).count()
-    val hist = served.groupBy(col("cell")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // <= nCells
-    val perCell = centroids.map { case (c, _) => hist.getOrElse(c, 0L) }
-    val total = baseRows + segRows
+    // committed generation are dead (crash window before eager GC);
+    // marker guards apply (reads fail loud mid-maintenance)
+    val served = servedCells(spark, path)
+    val perCell = centroids.map { case (c, _) => served.perCell.getOrElse(c, 0L) }
+    val total = served.baseRows + served.segmentRows
     val maxCell = if (perCell.isEmpty) 0L else perCell.max
     val skew = if (total == 0L) 0L else 100L * maxCell * nCells / total
     Seq(
-      ("base_rows", baseRows),
+      ("base_rows", served.baseRows),
       ("deleted_since_retrain", deletedSinceRetrain(spark, path)),
       ("empty_cells", perCell.count(_ == 0L).toLong),
       ("max_cell_rows", maxCell),
       ("min_cell_rows", if (perCell.isEmpty) 0L else perCell.min),
       ("n_cells", nCells),
-      ("segment_rows", segRows),
-      ("segments_pending", segs.size.toLong),
+      ("segment_rows", served.segmentRows),
+      ("segments_pending", served.segments.toLong),
       ("skew_x100", skew))
       .toDF("stat", "value")
     }
@@ -701,18 +750,25 @@ object Similarity {
     * like every planning table in this package (q250/q255/q262) — is
     * engine-replayable: q269 recomputes the assignment, the
     * zero-filled histogram, both cumulative curves and the ppm floor
-    * divisions in DuckDB. Cost: one nCells-row aggregation + an
-    * nCells driver fold; the corpus is scanned once, never joined.
+    * divisions in DuckDB. Source: the centroid table and the served
+    * per-cell histogram from the `cell=N` footers ([[servedCells]]) —
+    * no Spark job with warm parameter caches; the nCells-row fold runs
+    * on the driver.
     */
   def ivfProbePlanTable(
       spark: SparkSession, path: String,
-      idCol: String, vecCol: String): DataFrame =
+      idCol: String, vecCol: String): DataFrame = {
+    import spark.implicits._
+    probePlanRows(spark, path).toDF("n_probe", "worst_rows", "best_rows",
+      "total_rows", "worst_mass_ppm", "best_mass_ppm")
+  }
+
+  /** The rows of [[ivfProbePlanTable]], ascending in `n_probe`. */
+  private def probePlanRows(
+      spark: SparkSession, path: String): Seq[(Int, Long, Long, Long, Long, Long)] =
     graft.core.Generations.retryOnLostSegments() {
-      import spark.implicits._
       val centroids = readIvfCentroids(spark, path)
-      val served = readIvfIndex(spark, path, idCol, vecCol).assigned
-      val hist = served.groupBy(col("cell")).count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // <= nCells
+      val hist = servedCells(spark, path).perCell
       val perCell = centroids.map { case (c, _) => (c, hist.getOrElse(c, 0L)) }
       val total = perCell.map(_._2).sum
       val asc = perCell.sortBy { case (c, n) => (n, c) }.map(_._2)
@@ -724,8 +780,7 @@ object Similarity {
           if (total == 0L) 1000000L else 1000000L * cum / total
         (i, cumA(i - 1), cumD(i - 1), total,
           ppm(cumA(i - 1)), ppm(cumD(i - 1)))
-      }.toDF("n_probe", "worst_rows", "best_rows", "total_rows",
-        "worst_mass_ppm", "best_mass_ppm")
+      }
     }
 
   /** The planner's decision: the minimal `nProbe` whose conservative
@@ -734,17 +789,18 @@ object Similarity {
     * model"). Always defined: at nProbe = nCells the bound is exactly
     * 10⁶. Feed the result straight to [[ivfTopK]]; q269 pins the
     * argmin, SimilaritySpec pins that the planned nProbe actually
-    * delivers the target recall on a planted-cluster corpus.
+    * delivers the target recall on a planted-cluster corpus. Picked on
+    * the driver from [[ivfProbePlanTable]]'s rows: no Spark job with
+    * warm parameter caches.
     */
   def ivfProbePlan(
       spark: SparkSession, path: String, idCol: String, vecCol: String,
       targetRecallPpm: Long): Int = {
     require(targetRecallPpm >= 0L && targetRecallPpm <= 1000000L,
       s"targetRecallPpm must be in [0, 1000000], got $targetRecallPpm")
-    val eligible = ivfProbePlanTable(spark, path, idCol, vecCol)
-      .filter(col("worst_mass_ppm") >= targetRecallPpm)
-      .agg(min(col("n_probe"))).head
-    if (eligible.isNullAt(0)) 1 else eligible.getInt(0) // null only on k=0
+    probePlanRows(spark, path)
+      .find(_._5 >= targetRecallPpm).map(_._1)
+      .getOrElse(1) // no row only on k=0
   }
 
   /** The planner WIRED INTO SERVING — the [[ivfTopK]] entry a caller
@@ -752,12 +808,12 @@ object Similarity {
     * count ([[graft.dedup.Dedup.nearDuplicatesPlanned]]'s ANN twin):
     * derive the minimal nProbe meeting `targetRecallPpm` from the
     * stored cell histogram ([[ivfProbePlan]]), then serve the top-k
-    * through the partition-pruned probe path with it. Planning cost
-    * is one nCells aggregation, amortizable by the caller across a
-    * query batch (the histogram only moves with index maintenance —
-    * re-plan after compact/retrain, not per query). q270 pins the
-    * whole composition: DuckDB re-derives the pick from the raw
-    * corpus and replays the probes at that derived count.
+    * through the partition-pruned probe path with it. Planning reads
+    * the cell footers (no Spark job) and is amortizable by the caller
+    * across a query batch (the histogram only moves with index
+    * maintenance — re-plan after compact/retrain, not per query).
+    * q270 pins the whole composition: DuckDB re-derives the pick from
+    * the raw corpus and replays the probes at that derived count.
     */
   def ivfTopKPlanned(
       spark: SparkSession, path: String, idCol: String, vecCol: String,
@@ -1186,25 +1242,53 @@ object Similarity {
     }.toMap
     val cellsNeeded = probes.values.flatten.toSet
     val pruned = index.assigned.filter(col("cell").isin(cellsNeeded.toSeq: _*))
+    // per query position: its vector, norm and heap slot (one heap per
+    // distinct query id); per probed cell: the query positions whose
+    // probe set holds it — the row loop visits only those
+    val qids = queries.map(_._1).distinct
+    val slotOf = qids.zipWithIndex.toMap
+    val slot = queries.map(q => slotOf(q._1)).toArray
+    val qvecs = queries.map(_._2).toArray
+    val qnorms = qvecs.map(normOf)
+    val byCell: Map[Int, Array[Int]] = queries.indices
+      .flatMap(j => probes(queries(j)._1).distinct.map(_ -> j))
+      .groupMap(_._1)(_._2).map { case (c, js) => c -> js.sorted.toArray }
     val spark = index.assigned.sparkSession
-    val bcProbes = spark.sparkContext.broadcast(probes)
-    val bcQueries = spark.sparkContext.broadcast(queries)
+    val bc = spark.sparkContext.broadcast((qids, slot, qvecs, qnorms, byCell))
     val idIdx = index.assigned.schema.fieldIndex(index.idCol)
     val vecIdx = index.assigned.schema.fieldIndex(index.vecCol)
     val cellIdx = index.assigned.schema.fieldIndex("cell")
     val partial = pruned.mapPartitions { rows =>
-      val qs = bcQueries.value
-      val pr = bcProbes.value
-      val heaps = qs.map { case (qid, _) => qid -> new BoundedTopK(k) }.toMap
+      val (ids, slots, vecs, norms, cells) = bc.value
+      val heaps = Array.fill(ids.size)(new BoundedTopK(k))
       rows.foreach { row =>
-        val cell = row.getInt(cellIdx)
-        val id = row.getLong(idIdx)
-        val vec = row.getSeq[Float](vecIdx)
-        qs.foreach { case (qid, qvec) =>
-          if (pr(qid).contains(cell)) heaps(qid).offer(id, cosine(vec, qvec))
+        val js = cells.getOrElse(row.getInt(cellIdx), Array.emptyIntArray)
+        if (js.nonEmpty) {
+          val id = row.getLong(idIdx)
+          val vec = row.getSeq[Float](vecIdx).toArray
+          val vn = normOf(vec)
+          var x = 0
+          while (x < js.length) {
+            val j = js(x)
+            // cosine(vec, q) with both norms hoisted: same fold order,
+            // same zero-norm guard, so scores are bit-identical
+            val q = vecs(j)
+            val d = vn * norms(j)
+            val score =
+              if (d == 0.0) 0.0
+              else {
+                var acc = 0.0
+                var i = 0
+                val n = math.min(vec.length, q.length)
+                while (i < n) { acc += vec(i).toDouble * q(i).toDouble; i += 1 }
+                acc / d
+              }
+            heaps(slots(j)).offer(id, score)
+            x += 1
+          }
         }
       }
-      heaps.iterator.flatMap { case (qid, heap) =>
+      ids.iterator.zip(heaps.iterator).flatMap { case (qid, heap) =>
         heap.results.map { case (id, score) => Row(qid, id, score) }
       }
     }(Encoders.row(resultSchema))

@@ -68,4 +68,37 @@ class ParquetMetaSpec extends SparkSpec {
     Seq((7L, 8L)).toDF("a", "b").write.mode("overwrite").parquet(d)
     ParquetMeta.cachedRows(spark, d).map(_.getLong(0)) shouldBe Seq(7L)
   }
+
+  test("cachedRows equals the inferred read and a cold read is one job") {
+    val d = tmp()
+    Seq((1, 2L, Seq(0.5f, -1f)), (3, 4L, Seq.empty[Float]))
+      .toDF("cell", "n", "centroid").repartition(2)
+      .write.mode("overwrite").parquet(d)
+    val want = spark.read.parquet(d).collect().toSeq
+    var got = Seq.empty[org.apache.spark.sql.Row]
+    jobsStartedBy { got = ParquetMeta.cachedRows(spark, d) } shouldBe 1
+    got shouldBe want
+    got.head.schema shouldBe want.head.schema
+    jobsStartedBy { ParquetMeta.cachedRows(spark, d) } shouldBe 0
+  }
+
+  test("footer row counts equal a scan, per partition directory, and " +
+    "refresh when the table is rewritten in place") {
+    val d = tmp()
+    def write(n: Int): Unit =
+      (0 until n).map(i => (i.toLong, i % 3)).toDF("id", "cell")
+        .repartition(2).write.partitionBy("cell").mode("overwrite").parquet(d)
+    def scan: Map[String, Long] = spark.read.parquet(d).groupBy("cell").count()
+      .collect().map(r => s"cell=${r.getInt(0)}" -> r.getLong(1)).toMap
+    write(10)
+    ParquetMeta.partitionRowCounts(spark, d) shouldBe scan
+    ParquetMeta.rowCount(spark, Seq(d, d)) shouldBe 20L
+    write(7) // same directory, rewritten: the cached counts must not serve
+    ParquetMeta.partitionRowCounts(spark, d) shouldBe scan
+    ParquetMeta.rowCount(spark, Seq(d)) shouldBe 7L
+    // files directly under the table directory count under ""
+    val flat = tmp()
+    Seq(1L, 2L, 3L).toDF("id").write.mode("overwrite").parquet(flat)
+    ParquetMeta.partitionRowCounts(spark, flat) shouldBe Map("" -> 3L)
+  }
 }

@@ -42,6 +42,20 @@ class SimilaritySpec extends SparkSpec {
     got.toSeq shouldBe expected.toSeq
   }
 
+  test("exhaustive ivfTopK returns the brute-force scores bit for bit, " +
+    "zero vectors included") {
+    val data = corpus(120, 16, seed = 9) :+ ((999L, Seq.fill(16)(0.0f)))
+    val df = data.toDF("vec_id", "embedding").repartition(5)
+    val index = Similarity.buildIvf(df, "vec_id", "embedding", nCells = 6)
+    val queries = data.take(4).map { case (id, v) => (id, v.toArray) } :+
+      ((-1L, Array.fill(16)(0.0f)))
+    def rows(out: org.apache.spark.sql.DataFrame) = out
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSet
+    rows(Similarity.ivfTopK(index, queries, k = 7, nProbe = 6)) shouldBe
+      rows(Similarity.bruteForceTopK(df, "vec_id", "embedding", queries, k = 7))
+  }
+
   test("ivf search prunes cells yet keeps high recall on clustered data") {
     // two well-separated clusters: recall within the probed cells is high
     val rng = new Random(5)
