@@ -43,9 +43,9 @@ import org.apache.spark.sql.types.StructType
   *     invalidates; the API contract keeps `meta` immutable anyway).
   *
   *   - lifecycle readouts (stats, maintenance advice, probe plans)
-  *     need ROW COUNTS, which every footer carries. [[partitionRowCounts]]
-  *     sums them per partition directory with no Spark job (a `count()`
-  *     is one job plus its planning round trip), cached by the same
+  *     need ROW COUNTS, which every footer carries. [[footers]] sums
+  *     them per partition directory with no Spark job (a `count()` is
+  *     one job plus its planning round trip), cached by the same
   *     fingerprint. Callers use it only where the stored rows ARE the
   *     served rows (no pending tombstones masking them).
   *
@@ -55,16 +55,23 @@ import org.apache.spark.sql.types.StructType
   * host). Every footer read here goes through [[openFooters]], which
   * builds ONE `HadoopReadOptions` per call and opens each file from
   * the listing's `FileStatus` (no extra stat): 0.4-0.8 ms per footer
-  * (the same 64 files: 24-50 ms).
+  * (the same 64 files: 24-50 ms). A COLD count (after any rewrite
+  * changes the fingerprint — every compact, retrain or removal) opens
+  * every data file's footer, one after another on the driver, where a
+  * `count()` spreads them over the executors: on HDFS or an object
+  * store that is one or more remote calls per file, growing linearly
+  * with the file count (a cell-partitioned base holds up to nCells ×
+  * writer tasks files). Only local-disk costs have been measured.
   *
   * What this is NOT: a result cache. Nothing here memoizes query
   * output or anything keyed on the input corpus — only parquet
   * SCHEMAS, footer ROW COUNTS and sub-kilobyte parameter tables, all
   * re-validated against the directory's physical state on every call
-  * (the same role a table catalog plays for a real warehouse). At 100 TB the
-  * win is the same shape: schema pinning skips a footer round-trip
-  * per table open, and the fingerprint is one RPC against the
-  * directory listing the read was about to do anyway.
+  * (the same role a table catalog plays for a real warehouse). For
+  * schemas the saving does not depend on scale: schema pinning skips a
+  * footer round-trip per table open, and the fingerprint is one RPC
+  * against the directory listing the read was about to do anyway. For
+  * row counts it does (see the cold-count cost above).
   */
 object ParquetMeta {
 
@@ -166,15 +173,14 @@ object ParquetMeta {
     schema
   }
 
-  /** Footer row counts of the parquet table at `dir`, summed per
-    * partition directory (`"cell=3" -> rows`; "" collects the files
-    * directly under `dir`) — what `count()` / `groupBy(partition)
+  /** Footer row counts of the table behind `l`, summed per partition
+    * directory (`"cell=3" -> rows`; "" collects the files directly
+    * under the table directory) — what `count()` / `groupBy(partition)
     * .count()` over the table would return, with no Spark job. Cached
     * by directory content fingerprint: an unchanged table costs its
     * listing only.
     */
-  def partitionRowCounts(spark: SparkSession, dir: String): Map[String, Long] = {
-    val l = listing(spark, dir)
+  private def cachedCounts(spark: SparkSession, l: Listing): Map[String, Long] = {
     val hit = countsCache.get(l.key)
     if (hit != null && hit.fp == l.fp) return hit.counts
     val rows = openFooters(spark.sparkContext.hadoopConfiguration, l.files.map(_._2))
@@ -183,12 +189,6 @@ object ParquetMeta {
     capped(countsCache).put(l.key, CountsEntry(l.fp, counts))
     counts
   }
-
-  /** Total footer row count of every table in `dirs` (see
-    * [[partitionRowCounts]]).
-    */
-  def rowCount(spark: SparkSession, dirs: Seq[String]): Long =
-    dirs.map(partitionRowCounts(spark, _).values.sum).sum
 
   /** Spark's file-source reads force the data schema nullable
     * (`HadoopFsRelation` applies `asNullable`, which is private[spark]);
@@ -214,12 +214,16 @@ object ParquetMeta {
     * an analysis error) — and a later compact would persist the loss.
     * Fingerprint-cached footer work only, no Spark job.
     */
-  def pinnedSchema(spark: SparkSession, dirs: Seq[String]): StructType = {
+  def pinnedSchema(spark: SparkSession, dirs: Seq[String]): StructType =
+    pinned(spark, dirs, dirs.map(listing(spark, _)))
+
+  private def pinned(
+      spark: SparkSession, dirs: Seq[String], ls: Seq[Listing]): StructType = {
     require(dirs.nonEmpty, "pinnedSchema: no directories")
-    val dataSchema = schemaOf(spark, dirs.head)
+    val dataSchema = cachedSchema(spark, ls.head)
     val pinned = dataSchema.fields.map(f => f.name -> f.dataType).sortBy(_._1).toSeq
-    for (d <- dirs.tail) {
-      val got = schemaOf(spark, d).fields
+    for ((d, l) <- dirs.zip(ls).tail) {
+      val got = cachedSchema(spark, l).fields
         .map(f => f.name -> f.dataType).sortBy(_._1).toSeq
       require(got == pinned,
         s"readPinned: $d footer schema $got differs from the pinned " +
@@ -227,6 +231,25 @@ object ParquetMeta {
           "writer; rebuild or compact the divergent segment")
     }
     dataSchema
+  }
+
+  /** Pinned schema and per-root partition row counts (see [[footers]]). */
+  final case class Footers(schema: StructType, counts: Seq[Map[String, Long]]) {
+    /** Total footer rows over every root. */
+    def rows: Long = counts.iterator.map(_.values.sum).sum
+  }
+
+  /** Footer readout of the roots of one served table: the
+    * [[pinnedSchema]] (the one-writer guard every pinned read applies)
+    * and, per root, the footer row counts summed per partition
+    * directory (`"cell=3" -> rows`; "" collects the files directly
+    * under the root) — what `count()` / `groupBy(partition).count()`
+    * would return, with no Spark job. One listing per root serves
+    * both; the counts are cached by the same fingerprint as the schema.
+    */
+  def footers(spark: SparkSession, dirs: Seq[String]): Footers = {
+    val ls = dirs.map(listing(spark, _))
+    Footers(pinned(spark, dirs, ls), ls.map(cachedCounts(spark, _)))
   }
 
   /** One relation over every root in `dirs`, with the schema pinned

@@ -575,11 +575,9 @@ object DedupIndex {
       val roots = servedRoots(spark, path)
       val (nTombstones, exactRows, setsRows) = tombstones(spark, path) match {
         case None =>
-          def footerRows(sub: String): Long = {
-            val dirs = roots.map(r => s"$r/$sub")
-            graft.core.ParquetMeta.pinnedSchema(spark, dirs) // one-writer guard
-            graft.core.ParquetMeta.rowCount(spark, dirs)
-          }
+          // footers' pinned schema is the one-writer guard reads apply
+          def footerRows(sub: String): Long =
+            graft.core.ParquetMeta.footers(spark, roots.map(r => s"$r/$sub")).rows
           (0L, footerRows("exact"), footerRows("sets"))
         case Some(t) =>
           val idx = read(spark, path)

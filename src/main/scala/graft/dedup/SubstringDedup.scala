@@ -482,7 +482,7 @@ object SubstringDedup {
       val roots = fingerprintRoots(spark, path)
       val (nTombstones, rows) = tombstones(spark, path) match {
         case None =>
-          (0L, graft.core.ParquetMeta.rowCount(spark, roots.map(r => s"$r/fingerprints")))
+          (0L, graft.core.ParquetMeta.footers(spark, roots.map(r => s"$r/fingerprints")).rows)
         case Some(t) => (t.distinct().count(), served.count())
       }
       Seq(

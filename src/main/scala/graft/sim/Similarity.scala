@@ -40,14 +40,6 @@ object Similarity {
     math.sqrt(acc)
   }
 
-  /** [[norm]] over a primitive array (same fold, no boxing). */
-  private def normOf(a: Array[Float]): Double = {
-    var acc = 0.0
-    var i = 0
-    while (i < a.length) { acc += a(i).toDouble * a(i).toDouble; i += 1 }
-    math.sqrt(acc)
-  }
-
   def cosine(a: collection.Seq[Float], b: collection.Seq[Float]): Double = {
     val d = norm(a) * norm(b)
     if (d == 0.0) 0.0 else dot(a, b) / d
@@ -341,37 +333,28 @@ object Similarity {
   /** [[ServedCells]] of the index at `path`. Every `assigned` table is
     * written `partitionBy("cell")` and IVF has no tombstones (deletion
     * rewrites the cell files), so the Parquet footers of the `cell=N`
-    * directories hold exactly the served counts: no Spark job. Falls
-    * back to a scan (a count per base and segment side plus a per-cell
-    * aggregation) when a root holds rows outside a `cell=N` directory.
+    * directories hold exactly the served counts: no Spark job. A root
+    * with rows outside a `cell=N` directory is a layout no writer here
+    * produces, and fails loud.
     */
   private def servedCells(spark: SparkSession, path: String): ServedCells = {
     val roots = servedAssignedRoots(spark, path)
-    val footerCells = roots.map { r =>
-      val counts = graft.core.ParquetMeta.partitionRowCounts(spark, r)
-        .filter(_._2 > 0L).toSeq
-      val cells = counts.flatMap { case (dir, n) =>
-        (if (dir.startsWith("cell=")) dir.stripPrefix("cell=").toIntOption
-         else None).map(_ -> n)
+    // footers' pinned schema is the one-writer guard reads apply
+    val perRoot = roots.zip(graft.core.ParquetMeta.footers(spark, roots).counts)
+      .map { case (r, counts) =>
+        counts.filter(_._2 > 0L).map { case (dir, n) =>
+          val cell = Some(dir).filter(_.startsWith("cell="))
+            .flatMap(_.stripPrefix("cell=").toIntOption)
+          require(cell.isDefined,
+            s"IVF table $r holds rows outside a cell=N directory " +
+              s"(${if (dir.isEmpty) "at its root" else dir}) — every " +
+              "assigned table is written partitionBy(\"cell\"); rebuild " +
+              "the index with writeIvfIndex")
+          cell.get -> n
+        }
       }
-      if (cells.size == counts.size) Some(cells.toMap) else None
-    }
-    if (footerCells.forall(_.isDefined)) {
-      // the one-writer guard the scan path's pinned read applies
-      graft.core.ParquetMeta.pinnedSchema(spark, roots)
-      val perRoot = footerCells.flatten
-      ServedCells(roots.size - 1, perRoot.head.values.sum, perRoot.tail.map(_.values.sum).sum,
-        perRoot.flatten.groupMapReduce(_._1)(_._2)(_ + _))
-    } else {
-      def read(dirs: Seq[String]) = graft.core.ParquetMeta.readPinned(
-        spark, dirs, partitionCols = cellPartitionCol)
-      ServedCells(
-        roots.size - 1,
-        read(roots.take(1)).count(),
-        if (roots.size == 1) 0L else read(roots.tail).count(),
-        read(roots).groupBy(col("cell")).count()
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap) // <= nCells
-    }
+    ServedCells(roots.size - 1, perRoot.head.values.sum, perRoot.tail.map(_.values.sum).sum,
+      perRoot.flatten.groupMapReduce(_._1)(_._2)(_ + _))
   }
 
   /** The stored centroid table of an on-disk index (nCells rows —
@@ -496,9 +479,9 @@ object Similarity {
     * `segments_pending` the served segment directories; `base_rows`,
     * `segment_rows` and the per-cell histogram come from the Parquet
     * footers of the `cell=N` directories ([[servedCells]]: exact, since
-    * IVF has no tombstones; a scan only for a root with rows outside a
-    * `cell=N` directory); `deleted_since_retrain` sums the journal (one
-    * job when the journal exists). So with warm parameter caches and no
+    * IVF has no tombstones); `deleted_since_retrain` sums the journal (a
+    * Spark aggregation when the journal exists). So with warm parameter
+    * caches and no
     * journal the readout starts no Spark job; the driver-side fold is
     * bounded by nCells. q253 pins every number against DuckDB
     * replaying the assignment and the same integer arithmetic.
@@ -1242,53 +1225,25 @@ object Similarity {
     }.toMap
     val cellsNeeded = probes.values.flatten.toSet
     val pruned = index.assigned.filter(col("cell").isin(cellsNeeded.toSeq: _*))
-    // per query position: its vector, norm and heap slot (one heap per
-    // distinct query id); per probed cell: the query positions whose
-    // probe set holds it — the row loop visits only those
-    val qids = queries.map(_._1).distinct
-    val slotOf = qids.zipWithIndex.toMap
-    val slot = queries.map(q => slotOf(q._1)).toArray
-    val qvecs = queries.map(_._2).toArray
-    val qnorms = qvecs.map(normOf)
-    val byCell: Map[Int, Array[Int]] = queries.indices
-      .flatMap(j => probes(queries(j)._1).distinct.map(_ -> j))
-      .groupMap(_._1)(_._2).map { case (c, js) => c -> js.sorted.toArray }
     val spark = index.assigned.sparkSession
-    val bc = spark.sparkContext.broadcast((qids, slot, qvecs, qnorms, byCell))
+    val bcProbes = spark.sparkContext.broadcast(probes)
+    val bcQueries = spark.sparkContext.broadcast(queries)
     val idIdx = index.assigned.schema.fieldIndex(index.idCol)
     val vecIdx = index.assigned.schema.fieldIndex(index.vecCol)
     val cellIdx = index.assigned.schema.fieldIndex("cell")
     val partial = pruned.mapPartitions { rows =>
-      val (ids, slots, vecs, norms, cells) = bc.value
-      val heaps = Array.fill(ids.size)(new BoundedTopK(k))
+      val qs = bcQueries.value
+      val pr = bcProbes.value
+      val heaps = qs.map { case (qid, _) => qid -> new BoundedTopK(k) }.toMap
       rows.foreach { row =>
-        val js = cells.getOrElse(row.getInt(cellIdx), Array.emptyIntArray)
-        if (js.nonEmpty) {
-          val id = row.getLong(idIdx)
-          val vec = row.getSeq[Float](vecIdx).toArray
-          val vn = normOf(vec)
-          var x = 0
-          while (x < js.length) {
-            val j = js(x)
-            // cosine(vec, q) with both norms hoisted: same fold order,
-            // same zero-norm guard, so scores are bit-identical
-            val q = vecs(j)
-            val d = vn * norms(j)
-            val score =
-              if (d == 0.0) 0.0
-              else {
-                var acc = 0.0
-                var i = 0
-                val n = math.min(vec.length, q.length)
-                while (i < n) { acc += vec(i).toDouble * q(i).toDouble; i += 1 }
-                acc / d
-              }
-            heaps(slots(j)).offer(id, score)
-            x += 1
-          }
+        val cell = row.getInt(cellIdx)
+        val id = row.getLong(idIdx)
+        val vec = row.getSeq[Float](vecIdx)
+        qs.foreach { case (qid, qvec) =>
+          if (pr(qid).contains(cell)) heaps(qid).offer(id, cosine(vec, qvec))
         }
       }
-      ids.iterator.zip(heaps.iterator).flatMap { case (qid, heap) =>
+      heaps.iterator.flatMap { case (qid, heap) =>
         heap.results.map { case (id, score) => Row(qid, id, score) }
       }
     }(Encoders.row(resultSchema))

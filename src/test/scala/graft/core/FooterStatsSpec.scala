@@ -151,6 +151,23 @@ class FooterStatsSpec extends SparkSpec {
     } shouldBe 0
   }
 
+  test("ivfStats fails loud on rows outside a cell=N directory") {
+    val rng = new Random(6)
+    val dir = tmp("footer_ivf_stray_")
+    Similarity.writeIvfIndex(
+      Similarity.buildIvf(vecs(rng, 0 until 20).toDF("vec_id", "embedding"),
+        "vec_id", "embedding", nCells = 2), dir)
+    // a data file at the root of the served base, as no writer lays out
+    val base = Similarity.servedAssignedDir(spark, dir)
+    val stray = Files.createTempDirectory("footer_ivf_stray_src_").toString + "/t"
+    spark.read.parquet(base).drop("cell").limit(3).coalesce(1)
+      .write.parquet(stray)
+    val part = new java.io.File(stray).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(part.toPath, new java.io.File(base, "stray.parquet").toPath)
+    val e = intercept[IllegalArgumentException](ivfStatsMap(dir))
+    e.getMessage should include("outside a cell=N directory")
+  }
+
   // ---- MinHash dedup index -------------------------------------------
 
   private val words = Seq("alpha", "beta", "gamma", "delta", "epsilon",

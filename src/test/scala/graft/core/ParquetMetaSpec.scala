@@ -91,14 +91,14 @@ class ParquetMetaSpec extends SparkSpec {
     def scan: Map[String, Long] = spark.read.parquet(d).groupBy("cell").count()
       .collect().map(r => s"cell=${r.getInt(0)}" -> r.getLong(1)).toMap
     write(10)
-    ParquetMeta.partitionRowCounts(spark, d) shouldBe scan
-    ParquetMeta.rowCount(spark, Seq(d, d)) shouldBe 20L
+    ParquetMeta.footers(spark, Seq(d)).counts shouldBe Seq(scan)
+    ParquetMeta.footers(spark, Seq(d, d)).rows shouldBe 20L
     write(7) // same directory, rewritten: the cached counts must not serve
-    ParquetMeta.partitionRowCounts(spark, d) shouldBe scan
-    ParquetMeta.rowCount(spark, Seq(d)) shouldBe 7L
+    ParquetMeta.footers(spark, Seq(d)).counts shouldBe Seq(scan)
+    ParquetMeta.footers(spark, Seq(d)).rows shouldBe 7L
     // files directly under the table directory count under ""
     val flat = tmp()
     Seq(1L, 2L, 3L).toDF("id").write.mode("overwrite").parquet(flat)
-    ParquetMeta.partitionRowCounts(spark, flat) shouldBe Map("" -> 3L)
+    ParquetMeta.footers(spark, Seq(flat)).counts shouldBe Seq(Map("" -> 3L))
   }
 }
