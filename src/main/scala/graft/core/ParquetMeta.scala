@@ -131,10 +131,11 @@ object ParquetMeta {
   private final case class Listing(
       key: String, fp: String, files: Seq[(String, FileStatus)])
 
-  private def listing(spark: SparkSession, dir: String): Listing = {
+  private def listing(
+      spark: SparkSession, dir: String, allowEmpty: Boolean = false): Listing = {
     val f = fs(spark, dir)
     val files = dataFiles(f, dir)
-    require(files.nonEmpty, s"no parquet data files under $dir")
+    require(allowEmpty || files.nonEmpty, s"no parquet data files under $dir")
     // qualified-URI key: two sessions resolving the same relative path
     // through different working filesystems must not share an entry
     Listing(f.makeQualified(new HPath(dir)).toString, fingerprint(files), files)
@@ -261,8 +262,15 @@ object ParquetMeta {
     */
   def readPinned(
       spark: SparkSession, dirs: Seq[String],
+      partitionCols: StructType = new StructType()): DataFrame =
+    readWith(spark, dirs, pinnedSchema(spark, dirs), partitionCols)
+
+  /** [[readPinned]] with the data schema a caller already pinned (from
+    * [[pinnedSchema]] or [[footers]]), so the roots are not listed again.
+    */
+  def readWith(
+      spark: SparkSession, dirs: Seq[String], dataSchema: StructType,
       partitionCols: StructType = new StructType()): DataFrame = {
-    val dataSchema = pinnedSchema(spark, dirs)
     val full = partitionCols.fields.foldLeft(dataSchema)(_ add _)
     if (partitionCols.isEmpty || dirs.size == 1)
       spark.read.schema(full).parquet(dirs: _*)
@@ -283,15 +291,20 @@ object ParquetMeta {
     * uncached read would return them; an unpartitioned table is read
     * with its footer schema pinned, so a cold read is the collect job
     * alone (inference would add a footer-reading job before it).
+    *
+    * A `schema` reads with that FIXED schema instead of the footer's —
+    * for append-only journals, which a crashed append can leave holding
+    * a footer-less file or no data file at all (no rows, not an error).
     */
-  def cachedRows(spark: SparkSession, dir: String): Seq[Row] = {
-    val l = listing(spark, dir)
+  def cachedRows(
+      spark: SparkSession, dir: String, schema: Option[StructType] = None): Seq[Row] = {
+    val l = listing(spark, dir, allowEmpty = schema.isDefined)
     val hit = rowsCache.get(l.key)
     if (hit != null && hit.fp == l.fp) return hit.rows
-    val read =
-      if (l.files.exists(_._1.nonEmpty)) spark.read
-      else spark.read.schema(cachedSchema(spark, l))
-    val rows = read.parquet(dir).collect().toSeq
+    val read = schema
+      .orElse(if (l.files.exists(_._1.nonEmpty)) None else Some(cachedSchema(spark, l)))
+      .fold(spark.read)(spark.read.schema)
+    val rows = if (l.files.isEmpty) Nil else read.parquet(dir).collect().toSeq
     capped(rowsCache).put(l.key, RowsEntry(l.fp, rows))
     rows
   }

@@ -139,6 +139,12 @@ object Dedup {
         least(m, pmod(h * ab.getField("_1") + ab.getField("_2"), lit(MersennePrime)))))
   }
 
+  /** The bucket key of band `b` of a MinHash signature — the hash
+    * [[lshBuckets]] explodes per band.
+    */
+  private[dedup] def bandBucket(signature: Column, b: Int, rowsPerBand: Int): Column =
+    xxhash64(concat_ws(",", slice(signature, b * rowsPerBand + 1, rowsPerBand)))
+
   /** LSH banding: split the signature into `bands` rows of
     * `rowsPerBand`, hash each band. Docs sharing any band hash are
     * candidates. Returns (band, bucket) pairs exploded per doc.
@@ -146,10 +152,8 @@ object Dedup {
   def lshBuckets(df: DataFrame, idCol: String, signatureCol: String,
       bands: Int, rowsPerBand: Int): DataFrame = {
     val bandStructs = (0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        xxhash64(concat_ws(",",
-          slice(col(signatureCol), b * rowsPerBand + 1, rowsPerBand))).as("bucket"))
+      struct(lit(b).as("band"),
+        bandBucket(col(signatureCol), b, rowsPerBand).as("bucket"))
     }
     df.select(col(idCol), explode(array(bandStructs: _*)).as("bb"))
       .select(col(idCol), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
@@ -581,9 +585,9 @@ object Dedup {
     * against the corpus.
     *
     * With materialize = true (default) the hits are collected and the
-    * result is a filter over `batch` (see [[survivorsAgainst]], shared
-    * with [[DedupIndex.dedupAgainst]]); materialize = false keeps both
-    * steps as lazy anti-joins against the corpus.
+    * result is a filter over `batch` (see [[survivorsAgainst]]);
+    * materialize = false keeps both steps as lazy anti-joins against
+    * the corpus.
     */
   def dedupAgainst(
       batch: DataFrame,
@@ -607,9 +611,8 @@ object Dedup {
       lazySurvivorsAgainst(batch, corpusKeys.distinct(), idCol, textCol)(verified(_)(identity))
   }
 
-  /** The materialized dedup-against shared by [[dedupAgainst]] and
-    * [[DedupIndex.dedupAgainst]]. Per-call state is bounded by the
-    * batch (the module's batch ≪ corpus contract):
+  /** The materialized [[dedupAgainst]]. Per-call state is bounded by
+    * the batch (the module's batch ≪ corpus contract):
     *   - exact hits: `storedKeys` (`__key` fingerprints) is semi-joined
     *     to the broadcast batch fingerprints — one map-side scan, the
     *     stored side never shuffled — and the distinct hit keys (at most
@@ -624,7 +627,7 @@ object Dedup {
     * a null text (null fingerprint) survives the exact step and a null
     * id survives the near step.
     */
-  private[dedup] def survivorsAgainst(
+  private def survivorsAgainst(
       batch: DataFrame, storedKeys: DataFrame, idCol: String, textCol: String)(
       nearIds: DataFrame => Array[Any]): DataFrame = {
     val key = TextStats.fingerprintMd5(col(textCol))
@@ -653,18 +656,18 @@ object Dedup {
   }
 
   /** The distinct `batch_id`s of a verified near-match plan. */
-  private[dedup] def matchedBatchIds(verified: DataFrame): Array[Any] =
+  private def matchedBatchIds(verified: DataFrame): Array[Any] =
     distinctValues(verified.select(col("batch_id")))
 
   // the distinct values of a one-column plan, deduplicated inside each
   // partition and then on the driver: a distinct() would add an
   // exchange, and so a job, to a collect of batch-bounded values
-  private def distinctValues(df: DataFrame): Array[Any] =
+  private[dedup] def distinctValues(df: DataFrame): Array[Any] =
     df.rdd.mapPartitions(_.map(_.get(0)).toSet.iterator).collect().distinct
 
   // rows of `df` whose `c` is null or outside `hits` — a left_anti
   // join's null semantics, as a filter
-  private def without(df: DataFrame, c: Column, hits: Array[Any]): DataFrame =
+  private[dedup] def without(df: DataFrame, c: Column, hits: Array[Any]): DataFrame =
     if (hits.isEmpty) df else df.filter(c.isNull || !c.isin(hits.toIndexedSeq: _*))
 
   // ---- SimHash ----

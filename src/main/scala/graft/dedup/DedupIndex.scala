@@ -1,7 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.text.TextStats
 
@@ -14,24 +15,25 @@ import graft.text.TextStats
   * subsequent batch dedup against it touching only:
   *
   *   - `exact`   — the 128-bit content fingerprints per corpus id
-  *                 (scanned map-side against the batch's fingerprints
-  *                 for exact matches);
+  *                 (filtered map-side to the batch's fingerprints for
+  *                 exact matches);
   *   - `buckets` — the banded MinHash (band, bucket) → capped member
-  *                 list table (equi-join target for near-dup
-  *                 candidates; the cap is baked at build time with the
-  *                 same [[graft.functions.CappedCollectList]] contract
-  *                 as the direct path);
+  *                 list table (probed with the batch's bucket keys for
+  *                 near-dup candidates; the cap is baked at build time
+  *                 with the same [[graft.functions.CappedCollectList]]
+  *                 contract as the direct path);
   *   - `sets`    — (corpus_id, shingles) for the exact-Jaccard verify
-  *                 join-back;
+  *                 of the candidates;
   *   - `meta`    — the build parameters, so a query can never run with
   *                 a mismatched hash family (params travel WITH the
   *                 index, not as caller arguments).
   *
-  * Per-batch cost is then shingling/signing the BATCH plus one
-  * (band, bucket) equi-join and one verify join against parquet —
-  * never a corpus re-derivation. Results are pinned equal to the
-  * direct [[Dedup.dedupAgainst]] path in DedupIndexSpec, and q62 runs
-  * the index path against q50's oracle.
+  * Per-batch cost is then shingling/signing the BATCH once plus one
+  * map-side pass over each stored table, none shuffled (the lazy
+  * plans join instead: one (band, bucket) equi-join and one verify
+  * join) — never a corpus re-derivation. Results are pinned equal to
+  * the direct [[Dedup.dedupAgainst]] path in DedupIndexSpec, and q62
+  * runs the index path against q50's oracle.
   *
   * Threshold is deliberately NOT baked: one index serves any Jaccard
   * threshold (it only affects the verify filter). Rebuild when the
@@ -571,16 +573,19 @@ object DedupIndex {
     // to the committed generation holding the same rows
     graft.core.Generations.retryOnLostSegments() {
       import spark.implicits._
-      readParams(spark, path) // a malformed index fails here, as read() would
+      val params = readParams(spark, path) // a malformed index fails here, as read() would
       val roots = servedRoots(spark, path)
       val (nTombstones, exactRows, setsRows) = tombstones(spark, path) match {
         case None =>
-          // footers' pinned schema is the one-writer guard reads apply
-          def footerRows(sub: String): Long =
-            graft.core.ParquetMeta.footers(spark, roots.map(r => s"$r/$sub")).rows
-          (0L, footerRows("exact"), footerRows("sets"))
+          // footers' pinned schema is the one-writer guard reads apply,
+          // and the layout guard runs on it: one listing per root
+          def footers(sub: String) =
+            graft.core.ParquetMeta.footers(spark, roots.map(r => s"$r/$sub"))
+          val exact = footers("exact")
+          requireIdLayout(roots, exact.schema)
+          (0L, exact.rows, footers("sets").rows)
         case Some(t) =>
-          val idx = read(spark, path)
+          val idx = readRoots(spark, path, params, roots)
           (t.distinct().count(), idx.exact.count(), idx.sets.count())
       }
       Seq(
@@ -676,16 +681,22 @@ object DedupIndex {
     */
   def read(
       spark: SparkSession, path: String,
-      excludeSegments: Set[String] = Set.empty): Index = {
-    val params = readParams(spark, path)
-    val roots = servedRoots(spark, path, excludeSegments)
+      excludeSegments: Set[String] = Set.empty): Index =
+    readRoots(spark, path, readParams(spark, path),
+      servedRoots(spark, path, excludeSegments))
+
+  private def readRoots(
+      spark: SparkSession, path: String, params: Params, roots: Seq[String]): Index = {
     // one pinned-schema multi-path relation per table instead of a
     // unionByName of per-root scans: same rows (all roots share one
     // writer), ~4x cheaper on the driver (schema inference + N
     // relations were ~70% of this call's wall clock)
     def union(sub: String): DataFrame =
       graft.core.ParquetMeta.readPinned(spark, roots.map(r => s"$r/$sub"))
-    val exact = union("exact")
+    val exactDirs = roots.map(r => s"$r/exact")
+    val exactSchema = graft.core.ParquetMeta.pinnedSchema(spark, exactDirs)
+    requireIdLayout(roots, exactSchema)
+    val exact = graft.core.ParquetMeta.readWith(spark, exactDirs, exactSchema)
     // pending deletes exclusion-filter the id-carrying tables; the
     // bucket lists stay as-stored (candidates only — a tombstoned
     // candidate dies in the verify join against the filtered sets)
@@ -695,9 +706,22 @@ object DedupIndex {
       antiTombstones(union("sets"), tomb))
   }
 
+  /** Format guard: `exact` once held distinct (__key) rows and now
+    * holds id-carrying (corpus_id, __key) rows, so tombstone deletes
+    * can exclusion-filter it. An index tree holding the old layout
+    * must fail HERE with the fix, not silently null-fill through a
+    * pinned read. `exactSchema` is the pinned schema of every root's `exact`
+    * (one writer, verified per root), so one check covers them all.
+    */
+  private def requireIdLayout(roots: Seq[String], exactSchema: StructType): Unit =
+    require(exactSchema.fieldNames.contains("corpus_id"),
+      s"dedup index table ${roots.head}/exact uses the pre-delete layout " +
+        "(fingerprints without corpus ids) — rebuild the index with " +
+        "DedupIndex.write to enable tombstone deletes and reads")
+
   /** The root directories a read serves — the served base first, then
     * each served segment not in `excludeSegments` — after the
-    * crashed-compact and table-format guards every read shares.
+    * crashed-compact guard every read shares.
     */
   private def servedRoots(
       spark: SparkSession, path: String,
@@ -719,65 +743,148 @@ object DedupIndex {
     // generational resolution: the served base is the latest COMMITTED
     // generation (its manifest excludes the segments it folded); the
     // root itself for a legacy tree no compact has upgraded
-    val roots = servedBaseDir(spark, path) +:
+    servedBaseDir(spark, path) +:
       servedSegmentDirs(spark, path)
         .filterNot(d => excludeSegments.contains(d.split('/').last))
-    // format guard: round 13 changed `exact` from distinct (__key)
-    // rows to id-carrying (corpus_id, __key) rows so tombstone deletes
-    // can exclusion-filter it. An index tree holding the old layout
-    // must fail HERE with the fix, not silently null-fill through the
-    // pinned-schema read below. Footer-only reads (fingerprint-cached,
-    // no Spark job) — no data scanned.
-    for (r <- roots)
-      require(graft.core.ParquetMeta.schemaOf(spark, s"$r/exact")
-          .fieldNames.contains("corpus_id"),
-        s"dedup index table $r/exact uses the pre-delete layout " +
-          "(fingerprints without corpus ids) — rebuild the index with " +
-          "DedupIndex.write to enable tombstone deletes and reads")
-    roots
   }
 
   /** Near-duplicate matches of `batch` against the indexed corpus —
     * [[Dedup.nearDuplicatesAgainst]] with the corpus side served from
-    * the index: the batch is shingled and signed with the index's
-    * stored hash family, bucket candidates come from ONE
-    * (band, bucket) equi-join against the stored bucket table, and the
-    * Jaccard verify joins the stored shingle sets. Returns
-    * (batch_id, corpus_id, jaccard) with jaccard ≥ threshold.
+    * the index. Returns (batch_id, corpus_id, jaccard) with
+    * jaccard ≥ threshold, one row per verified (batch row, stored
+    * `sets` row) pair.
     *
-    * The plan holds no cache: it is one query in which each stored
-    * table is scanned once (the two consumers of the candidate pairs
-    * share one exchange) and none is shuffled. materialize = true
-    * (default) checkpoints the (small) result locally — executor-local
-    * blocks, not replayable after executor loss; materialize = false
-    * returns the lazy plan.
+    * materialize = true (default) runs [[dedupAgainst]]'s near step
+    * over the whole batch: the batch is derived once and collected,
+    * `buckets` and then `sets` are each read in one map-side pass (see
+    * there), and the matches come back as a local DataFrame — no
+    * cached blocks, no reference to the index. The driver holds the
+    * batch's derived rows (id, fingerprint, shingles, band keys), the
+    * candidate pairs (at most batch × bands × `maxBucketSize`) and the
+    * matches.
+    *
+    * materialize = false returns the lazy plan: bucket candidates from
+    * ONE (band, bucket) equi-join against the stored bucket table,
+    * verified against the stored shingle sets. Each stored table is
+    * scanned once (the two consumers of the candidate pairs share one
+    * exchange) and none is shuffled.
     */
   def nearDuplicatesAgainst(
       batch: DataFrame, index: Index, idCol: String, textCol: String,
-      threshold: Double = 0.8, materialize: Boolean = true): DataFrame = {
-    val verified = verifiedAgainst(batch, index, idCol, textCol, threshold, materialize)
-    if (materialize) verified.localCheckpoint(true) else verified
+      threshold: Double = 0.8, materialize: Boolean = true): DataFrame =
+    if (!materialize) verifiedAgainst(batch, index, idCol, textCol, threshold)
+    else {
+      import scala.jdk.CollectionConverters._
+      val schema = StructType(Seq(
+        StructField("batch_id", batch.select(col(idCol)).schema.head.dataType),
+        StructField("corpus_id", index.sets.schema("corpus_id").dataType),
+        StructField("jaccard", DoubleType, nullable = false)))
+      val matches = nearMatches(derive(batch, idCol, textCol, index.params), index, threshold)
+      batch.sparkSession.createDataFrame(
+        matches.map { case (b, c, j) => Row(b, c, j) }.toSeq.asJava, schema)
+    }
+
+  /** One batch row as the materialized path holds it on the driver:
+    * its id, fingerprint, shingles (null when it has none) and the
+    * bucket key of each band (indexed by band).
+    */
+  private final case class Derived(
+      id: Any, key: String, shingles: Array[String], buckets: Array[Long])
+
+  /** Derive every batch row once — fingerprint, shingles, MinHash band
+    * keys — behind one hash exchange of the raw rows, and collect. The
+    * exchange keeps the CPU-dense signing at the shuffle width: a
+    * one-file batch would otherwise sign in ONE scan task.
+    */
+  private def derive(
+      batch: DataFrame, idCol: String, textCol: String, p: Params): Array[Derived] = {
+    val spread = batch.repartition(
+      batch.sparkSession.sessionState.conf.numShufflePartitions, col(idCol))
+    val sets = spread.select(col(idCol),
+      TextStats.fingerprintMd5(col(textCol)).as("__key"),
+      Dedup.shingles(col(textCol), p.shingleSize).as("__shingles"))
+    val signed = sets.withColumn("__sig", when(size(col("__shingles")) > 0,
+      Dedup.minhashSignature(col("__shingles"), p.numHashes, p.seed)))
+    signed.select(col(idCol), col("__key"),
+        when(size(col("__shingles")) > 0, col("__shingles")),
+        array((0 until p.bands).map(Dedup.bandBucket(col("__sig"), _, p.rowsPerBand)): _*))
+      .collect().map { r =>
+        val shingles = Option(r.getSeq[String](2)).map(_.toArray).orNull
+        Derived(r.get(0), r.getString(1), shingles,
+          if (shingles == null) null else r.getSeq[Long](3).toArray)
+      }
   }
 
+  /** The near step of the materialized path: (batch_id, corpus_id,
+    * jaccard) for the derived rows `rows`.
+    *   - the batch side's (band, bucket) → batch ids map, capped like
+    *     the stored lists ([[graft.functions.CappedCollectList]]: null
+    *     ids skipped, a group over `maxBucketSize` dropped);
+    *   - ONE map-side pass over `buckets`, filtered to the batch's
+    *     bucket keys, collects the matching stored lists; the candidate
+    *     pairs are crossed on the driver;
+    *   - ONE map-side pass over `sets`, filtered to the candidate
+    *     corpus ids, verifies each candidate against the broadcast
+    *     shingles of its batch rows with the lazy plan's size prefilter
+    *     and [[graft.functions.JaccardDistinct]] arithmetic.
+    */
+  private def nearMatches(
+      rows: Array[Derived], index: Index, threshold: Double): Array[(Any, Any, Double)] = {
+    val signed = rows.filter(r => r.id != null && r.shingles != null)
+    val groups = signed.iterator
+      .flatMap(r => r.buckets.iterator.zipWithIndex.map { case (bucket, band) => (band, bucket) -> r.id })
+      .toSeq.groupMap(_._1)(_._2)
+      .filter(_._2.size <= bufferCap(index.params.maxBucketSize))
+    if (groups.isEmpty) return Array.empty
+    val pairs = index.buckets
+      .filter(col("bucket").isin(groups.keys.map(_._2).toSeq.distinct: _*))
+      .select(col("band"), col("bucket"), col("ids"))
+      .collect()
+      .flatMap { s =>
+        val bids = groups.getOrElse((s.getInt(0), s.getLong(1)), Nil)
+        for (c <- s.getSeq[Any](2) if c != null; b <- bids) yield (b, c)
+      }.distinct
+    if (pairs.isEmpty) return Array.empty
+    val shinglesOf = signed.groupMap(_.id)(_.shingles)
+    val byCorpus: Map[Any, Array[(Any, Array[String])]] = pairs.groupMap(_._2)(_._1)
+      .map { case (c, bs) => c -> bs.flatMap(b => shinglesOf(b).map(b -> _)) }
+    val shared = index.sets.sparkSession.sparkContext.broadcast(byCorpus)
+    try index.sets
+      .filter(col("corpus_id").isin(byCorpus.keys.toSeq: _*))
+      .select(col("corpus_id"), col("__shingles"))
+      .rdd.mapPartitions { it =>
+        val candidates = shared.value
+        it.flatMap { r =>
+          val c = r.get(0)
+          val sb = r.getSeq[String](1)
+          candidates.getOrElse(c, Array.empty[(Any, Array[String])]).iterator.flatMap {
+            case (b, sa) =>
+              // J ≥ t ⟹ min ≥ t·max over distinct sets (shingles() are)
+              if (math.min(sa.length, sb.size).toDouble <
+                  threshold * math.max(sa.length, sb.size)) None
+              else {
+                val j = graft.functions.JaccardDistinct.of(
+                  sa.length, sa(_), sb.size, sb(_))
+                if (j >= threshold) Some((b, c, j)) else None
+              }
+          }
+        }
+      }.collect()
+    finally shared.destroy()
+  }
+
+  /** The lazy near-duplicate plan (materialize = false). */
   private def verifiedAgainst(
       batch: DataFrame, index: Index, idCol: String, textCol: String,
-      threshold: Double, materialize: Boolean): DataFrame = {
+      threshold: Double): DataFrame = {
     val p = index.params
     // the batch's shingle sets are batch-bounded and feed two branches
     // (bucket lists + verify): deriving them twice is cheaper than a
     // cache, whose build is one more job per call
-    def sets(df: DataFrame, id: String) = df
+    def sets(id: String) = batch
       .select(col(idCol).as(id), Dedup.shingles(col(textCol), p.shingleSize).as("__shingles"))
       .filter(size(col("__shingles")) > 0)
-    // CPU-dense signing must not run at the batch's scan width (a
-    // one-file batch would sign in ONE task): the materialized path
-    // hash-exchanges the raw rows first, as Dedup.nearDuplicatesAgainst
-    // does; the lazy path keeps its plan
-    val signInput =
-      if (!materialize) batch
-      else batch.repartition(
-        batch.sparkSession.sessionState.conf.numShufflePartitions, col(idCol))
-    val batchBuckets = cappedBuckets(sets(signInput, "__bid"), "__bid", "__bids", p)
+    val batchBuckets = cappedBuckets(sets("__bid"), "__bid", "__bids", p)
     // the batch side is batch-bounded by contract (batch ≪ corpus —
     // the module's whole premise); broadcast it so the STORED bucket
     // table is consumed map-side and never shuffled (a sort-merge
@@ -805,7 +912,7 @@ object DedupIndex {
     // size-ratio prefilter (J ≥ t ⟹ min ≥ t·max) skips the per-pair
     // set build for candidates the threshold already excludes; zero
     // false drops, identical post-threshold result
-    val ba = sets(batch, "batch_id").withColumnRenamed("__shingles", "__sa")
+    val ba = sets("batch_id").withColumnRenamed("__shingles", "__sa")
     // the stored `sets` table is corpus-sized — reduce it to the
     // candidates MAP-SIDE (broadcast semi on the candidate corpus
     // ids) instead of shuffling it whole into the verify join; the
@@ -831,31 +938,45 @@ object DedupIndex {
     * pinned equal to the direct path (DedupIndexSpec; q62 vs q50's
     * oracle).
     *
-    * With materialize = true (default; the shared
-    * [[Dedup.survivorsAgainst]]) every stored table is scanned once and
-    * none is shuffled:
-    *   - exact hits: ONE map-side pass over `exact`, semi-joined to the
-    *     broadcast batch fingerprints; the hit fingerprints (at most one
-    *     per batch row) are collected;
-    *   - near hits: the [[nearDuplicatesAgainst]] verify over the exact
-    *     survivors; its matched batch ids are collected, nothing is
-    *     checkpointed;
+    * With materialize = true (default) the batch is derived ONCE and
+    * each stored table is read in ONE map-side pass, none shuffled:
+    *   - batch: one hash exchange of the raw rows derives each row's
+    *     (id, fingerprint, shingles, per-band bucket keys), collected;
+    *   - exact hits: `exact`, filtered to the batch fingerprints; the
+    *     hit fingerprints (at most one per batch row) are collected;
+    *   - near hits, over the exact survivors: `buckets`, filtered to
+    *     the survivors' capped (band, bucket) keys, gives the candidate
+    *     pairs; `sets`, filtered to the candidate corpus ids, is
+    *     verified against the broadcast batch shingles (see
+    *     [[nearDuplicatesAgainst]]) and gives the matched batch ids;
     *   - the result is `batch` filtered by both hit sets. It holds no
     *     join and no cached blocks and does not read the index, so it
     *     stays valid after the index mutates (append, delete, compact).
-    * Collected state is bounded by the batch, the same contract the
-    * batch-side broadcasts rely on. materialize = false returns lazy
+    * The driver holds the batch's derived rows and the candidate pairs
+    * (at most batch × bands × `maxBucketSize`) — state bounded by the
+    * batch, the contract the batch-side broadcasts rely on. Exact hits
+    * are filtered by fingerprint and near hits by id, with the lazy
+    * anti-joins' null semantics: a null text survives the exact step
+    * and a null id the near step. materialize = false returns lazy
     * anti-joins against `exact` and the near matches instead.
     */
   def dedupAgainst(
       batch: DataFrame, index: Index, idCol: String, textCol: String,
-      threshold: Double = 0.8, materialize: Boolean = true): DataFrame = {
-    def verified(survivors: DataFrame) =
-      verifiedAgainst(survivors, index, idCol, textCol, threshold, materialize)
-    if (materialize)
-      Dedup.survivorsAgainst(batch, index.exact.select(col("__key")), idCol, textCol)(
-        s => Dedup.matchedBatchIds(verified(s)))
-    else
-      Dedup.lazySurvivorsAgainst(batch, index.exact, idCol, textCol)(verified)
-  }
+      threshold: Double = 0.8, materialize: Boolean = true): DataFrame =
+    if (!materialize)
+      Dedup.lazySurvivorsAgainst(batch, index.exact, idCol, textCol)(
+        verifiedAgainst(_, index, idCol, textCol, threshold))
+    else {
+      val rows = derive(batch, idCol, textCol, index.params)
+      val keys = rows.iterator.map(_.key).filter(_ != null).toSeq.distinct
+      val hits: Set[Any] =
+        if (keys.isEmpty) Set.empty
+        else Dedup.distinctValues(
+          index.exact.filter(col("__key").isin(keys: _*)).select(col("__key"))).toSet
+      val survivors = rows.filter(r => r.key == null || !hits.contains(r.key))
+      val nearIds = nearMatches(survivors, index, threshold).map(_._1).distinct
+      Dedup.without(
+        Dedup.without(batch, TextStats.fingerprintMd5(col(textCol)), hits.toArray),
+        col(idCol), nearIds.toArray)
+    }
 }

@@ -478,12 +478,16 @@ object SubstringDedup {
     // to the committed generation holding the same rows
     graft.core.Generations.retryOnLostSegments() {
       import spark.implicits._
-      val served = storedFingerprints(spark, path)
-      val roots = fingerprintRoots(spark, path)
-      val (nTombstones, rows) = tombstones(spark, path) match {
+      val roots = servedFingerprintRoots(spark, path)
+      val dirs = roots.map(r => s"$r/fingerprints")
+      // one listing per root: the footers' pinned schema serves the read
+      val (nTombstones, rows, served) = tombstones(spark, path) match {
         case None =>
-          (0L, graft.core.ParquetMeta.footers(spark, roots.map(r => s"$r/fingerprints")).rows)
-        case Some(t) => (t.distinct().count(), served.count())
+          val f = graft.core.ParquetMeta.footers(spark, dirs)
+          (0L, f.rows, graft.core.ParquetMeta.readWith(spark, dirs, f.schema))
+        case Some(t) =>
+          val served = masked(graft.core.ParquetMeta.readPinned(spark, dirs), Some(t))
+          (t.distinct().count(), served.count(), served)
       }
       Seq(
         ("distinct_docs",
@@ -634,7 +638,26 @@ object SubstringDedup {
 
   private def storedFingerprints(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      excludeSegments: Set[String] = Set.empty): DataFrame = {
+      excludeSegments: Set[String] = Set.empty): DataFrame =
+    // one pinned-schema multi-path relation over base + segments
+    // (same rows as the old unionByName of per-root scans — one
+    // writer, one schema; per-root schema inference dominated here)
+    masked(graft.core.ParquetMeta.readPinned(spark,
+      servedFingerprintRoots(spark, path, excludeSegments).map(r => s"$r/fingerprints")),
+      tombstones(spark, path))
+
+  // pending deletes exclusion-filter the served rows (one anti-join
+  // against the tombstone-sized table) until compact/purge folds them
+  // in physically
+  private def masked(unioned: DataFrame, tomb: Option[DataFrame]): DataFrame =
+    tomb.fold(unioned)(t => unioned.join(t, Seq("corpus_id"), "left_anti"))
+
+  /** [[fingerprintRoots]] behind the crashed-compact guard every read
+    * of the served fingerprints shares.
+    */
+  private def servedFingerprintRoots(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      excludeSegments: Set[String] = Set.empty): Seq[String] = {
     // a compaction crashed after its swap but before the segments/
     // cleanup would union already-merged rows with their still-live
     // segment copies — fail loud. Recovery: if fingerprints_old
@@ -649,17 +672,7 @@ object SubstringDedup {
         "left segment rows both merged and live under segments/; " +
         "delete segments/, tombstones/ and compact_tmp/ (the swapped " +
         "table is complete), then remove the marker")
-    // one pinned-schema multi-path relation over base + segments
-    // (same rows as the old unionByName of per-root scans — one
-    // writer, one schema; per-root schema inference dominated here)
-    val unioned = graft.core.ParquetMeta.readPinned(
-      spark, fingerprintRoots(spark, path, excludeSegments)
-        .map(r => s"$r/fingerprints"))
-    // pending deletes exclusion-filter the served rows (one anti-join
-    // against the tombstone-sized table) until compact/purge folds
-    // them in physically
-    tombstones(spark, path)
-      .fold(unioned)(t => unioned.join(t, Seq("corpus_id"), "left_anti"))
+    fingerprintRoots(spark, path, excludeSegments)
   }
 
   /** Verified batch×corpus substring matches served from the index:

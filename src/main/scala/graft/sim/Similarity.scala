@@ -1181,7 +1181,10 @@ object Similarity {
 
   /** Total vectors deleted since the last retrain (0 when none) — the
     * journal [[removeFromIvfIndex]] appends and
-    * [[compactIvfIndexWithRetrain]] resets.
+    * [[compactIvfIndexWithRetrain]] resets. The journal's rows are
+    * cached by its directory fingerprint
+    * ([[graft.core.ParquetMeta.cachedRows]]), so repeat readouts start
+    * no Spark job until a removal or retrain rewrites it.
     */
   private def deletedSinceRetrain(
       spark: SparkSession, path: String): Long = {
@@ -1194,13 +1197,13 @@ object Similarity {
       // present but holding no readable parquet footer — schema
       // inference throws, and a footer-less file sums to null. Neither
       // may brick ivfStats: read with the journal's fixed one-column
-      // schema and coalesce the sum. The accepted failure mode is an
+      // schema and sum the non-null rows. The accepted failure mode is an
       // UNDERCOUNT of one crashed batch (staleness slightly
       // underestimated, never overestimated) — the same direction the
       // append-after-overwrite ordering already implies.
-      val journal = spark.read
-        .schema("n BIGINT").parquet(p.toString)
-      journal.agg(coalesce(sum(col("n")), lit(0L))).head.getLong(0)
+      graft.core.ParquetMeta.cachedRows(spark, p.toString,
+        Some(org.apache.spark.sql.types.StructType.fromDDL("n BIGINT")))
+        .iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).sum
     }
   }
 

@@ -486,6 +486,28 @@ class SimilaritySpec extends SparkSpec {
     stat("deleted_since_retrain") shouldBe 0L
   }
 
+  test("a repeat ivfStats after a removal reads the deletions journal " +
+    "without a Spark job") {
+    val data = corpus(40, 8, seed = 33)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_deljobs").toString + "/idx"
+    Similarity.writeIvfIndex(Similarity.buildIvf(
+      data.toDF("vec_id", "embedding"), "vec_id", "embedding", nCells = 4), dir)
+    Similarity.removeFromIvfIndex(spark, dir,
+      data.map(_._1).filter(_ % 5 == 0).toDF("vec_id"), "vec_id")
+    def stats() = Similarity.ivfStats(spark, dir, "vec_id", "embedding")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val first = stats() // warms the centroid, footer and journal caches
+    first("deleted_since_retrain") shouldBe 8L
+    var again: Map[String, Long] = null
+    jobsStartedBy { again = stats() } shouldBe 0
+    again shouldBe first
+    // a second removal rewrites the journal: the cache re-validates
+    Similarity.removeFromIvfIndex(spark, dir,
+      data.map(_._1).filter(_ % 7 == 1).toDF("vec_id"), "vec_id")
+    stats()("deleted_since_retrain") shouldBe
+      data.map(_._1).count(i => i % 5 == 0 || i % 7 == 1).toLong
+  }
+
   test("ivf scans fewer rows than the corpus") {
     val data = corpus(100, 8, seed = 9)
     val df = data.toDF("vec_id", "embedding")
