@@ -139,12 +139,6 @@ object Dedup {
         least(m, pmod(h * ab.getField("_1") + ab.getField("_2"), lit(MersennePrime)))))
   }
 
-  /** The bucket key of band `b` of a MinHash signature — the hash
-    * [[lshBuckets]] explodes per band.
-    */
-  private[dedup] def bandBucket(signature: Column, b: Int, rowsPerBand: Int): Column =
-    xxhash64(concat_ws(",", slice(signature, b * rowsPerBand + 1, rowsPerBand)))
-
   /** LSH banding: split the signature into `bands` rows of
     * `rowsPerBand`, hash each band. Docs sharing any band hash are
     * candidates. Returns (band, bucket) pairs exploded per doc.
@@ -152,8 +146,10 @@ object Dedup {
   def lshBuckets(df: DataFrame, idCol: String, signatureCol: String,
       bands: Int, rowsPerBand: Int): DataFrame = {
     val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        bandBucket(col(signatureCol), b, rowsPerBand).as("bucket"))
+      struct(
+        lit(b).as("band"),
+        xxhash64(concat_ws(",",
+          slice(col(signatureCol), b * rowsPerBand + 1, rowsPerBand))).as("bucket"))
     }
     df.select(col(idCol), explode(array(bandStructs: _*)).as("bb"))
       .select(col(idCol), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
@@ -656,7 +652,7 @@ object Dedup {
   }
 
   /** The distinct `batch_id`s of a verified near-match plan. */
-  private def matchedBatchIds(verified: DataFrame): Array[Any] =
+  private[dedup] def matchedBatchIds(verified: DataFrame): Array[Any] =
     distinctValues(verified.select(col("batch_id")))
 
   // the distinct values of a one-column plan, deduplicated inside each

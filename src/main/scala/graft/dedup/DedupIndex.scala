@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.text.TextStats
 
@@ -28,12 +28,14 @@ import graft.text.TextStats
   *                 a mismatched hash family (params travel WITH the
   *                 index, not as caller arguments).
   *
-  * Per-batch cost is then shingling/signing the BATCH once plus one
-  * map-side pass over each stored table, none shuffled (the lazy
-  * plans join instead: one (band, bucket) equi-join and one verify
-  * join) — never a corpus re-derivation. Results are pinned equal to
-  * the direct [[Dedup.dedupAgainst]] path in DedupIndexSpec, and q62
-  * runs the index path against q50's oracle.
+  * Per-batch cost is then shingling/signing the BATCH plus one
+  * fingerprint probe of `exact`, ONE (band, bucket) equi-join against
+  * `buckets` and one verify join against `sets` — no stored table is
+  * shuffled, never a corpus re-derivation. The materialized calls
+  * derive the batch once and run the same near-duplicate plan as the
+  * lazy ones over the collected rows. Results are pinned equal to the
+  * direct [[Dedup.dedupAgainst]] path in DedupIndexSpec, and q62 runs
+  * the index path against q50's oracle.
   *
   * Threshold is deliberately NOT baked: one index serves any Jaccard
   * threshold (it only affects the verify filter). Rebuild when the
@@ -97,20 +99,22 @@ object DedupIndex {
   private def bufferCap(maxBucketSize: Long): Int =
     math.min(maxBucketSize, (Int.MaxValue - 8).toLong).toInt
 
-  /** Sign a (id, __shingles) table and collapse it to capped
+  /** A (id, __shingles) table with its MinHash signature `__sig`. */
+  private def signed(sets: DataFrame, params: Params): DataFrame =
+    sets.withColumn("__sig",
+      Dedup.minhashSignature(col("__shingles"), params.numHashes, params.seed))
+
+  /** Collapse a [[signed]] (id, __sig) table to capped
     * (band, bucket, members) — the shared shape of the stored corpus
     * table and the query-time batch side, so the two cannot drift.
     */
   private def cappedBuckets(
-      sets: DataFrame, idCol: String, outCol: String, params: Params): DataFrame = {
-    val signed = sets.withColumn("__sig",
-      Dedup.minhashSignature(col("__shingles"), params.numHashes, params.seed))
+      signed: DataFrame, idCol: String, outCol: String, params: Params): DataFrame =
     Dedup.lshBuckets(signed, idCol, "__sig", params.bands, params.rowsPerBand)
       .groupBy(col("band"), col("bucket"))
       .agg(graft.functions.CappedCollectList
         .cappedCollectList(col(idCol), bufferCap(params.maxBucketSize)).as(outCol))
       .filter(col(outCol).isNotNull)
-  }
 
   /** Derive the corpus-side index tables (lazily — nothing runs until
     * [[write]] or a query consumes them). Corpus ids must be unique and
@@ -132,7 +136,7 @@ object DedupIndex {
       .select(col(idCol).as("corpus_id"),
         Dedup.shingles(col(textCol), params.shingleSize).as("__shingles"))
       .filter(size(col("__shingles")) > 0)
-    Index(params, exact, cappedBuckets(sets, "corpus_id", "ids", params), sets)
+    Index(params, exact, cappedBuckets(signed(sets, params), "corpus_id", "ids", params), sets)
   }
 
   /** The three derived tables written under `root` (shared by the base
@@ -154,7 +158,7 @@ object DedupIndex {
       // computes each partition once)
       graft.core.Par.awaitAll(
         () => sets.write.mode("overwrite").parquet(s"$root/sets"),
-        () => cappedBuckets(sets, "corpus_id", "ids", params)
+        () => cappedBuckets(signed(sets, params), "corpus_id", "ids", params)
           .write.mode("overwrite").parquet(s"$root/buckets"),
         () => idx.exact.write.mode("overwrite").parquet(s"$root/exact"))
     } finally sets.unpersist()
@@ -750,187 +754,140 @@ object DedupIndex {
 
   /** Near-duplicate matches of `batch` against the indexed corpus —
     * [[Dedup.nearDuplicatesAgainst]] with the corpus side served from
-    * the index. Returns (batch_id, corpus_id, jaccard) with
-    * jaccard ≥ threshold, one row per verified (batch row, stored
-    * `sets` row) pair.
+    * the index: the batch is shingled and signed with the index's
+    * stored hash family, bucket candidates come from ONE
+    * (band, bucket) equi-join against the stored bucket table, and the
+    * Jaccard verify joins the stored shingle sets (see
+    * [[verifiedAgainst]], the one plan both modes run). Returns
+    * (batch_id, corpus_id, jaccard) with jaccard ≥ threshold.
     *
-    * materialize = true (default) runs [[dedupAgainst]]'s near step
-    * over the whole batch: the batch is derived once and collected,
-    * `buckets` and then `sets` are each read in one map-side pass (see
-    * there), and the matches come back as a local DataFrame — no
-    * cached blocks, no reference to the index. The driver holds the
-    * batch's derived rows (id, fingerprint, shingles, band keys), the
-    * candidate pairs (at most batch × bands × `maxBucketSize`) and the
-    * matches.
-    *
-    * materialize = false returns the lazy plan: bucket candidates from
-    * ONE (band, bucket) equi-join against the stored bucket table,
-    * verified against the stored shingle sets. Each stored table is
-    * scanned once (the two consumers of the candidate pairs share one
-    * exchange) and none is shuffled.
+    * Each stored table is scanned once (the two consumers of the
+    * candidate pairs share one exchange) and none is shuffled.
+    * materialize = true (default) first derives the batch once and
+    * collects it ([[derived]]), runs the plan over those rows as a
+    * local relation and checkpoints the (small) result locally —
+    * executor-local blocks, not replayable after executor loss. The
+    * driver holds the batch's derived rows (id, fingerprint, shingles,
+    * signature); the candidate pairs (at most batch × bands ×
+    * `maxBucketSize`) and the matches stay on the executors.
+    * materialize = false returns the lazy plan over `batch`.
     */
   def nearDuplicatesAgainst(
       batch: DataFrame, index: Index, idCol: String, textCol: String,
       threshold: Double = 0.8, materialize: Boolean = true): DataFrame =
-    if (!materialize) verifiedAgainst(batch, index, idCol, textCol, threshold)
+    if (!materialize)
+      verifiedAgainst(signedSets(batch, idCol, textCol, index.params), index, threshold)
     else {
-      import scala.jdk.CollectionConverters._
-      val schema = StructType(Seq(
-        StructField("batch_id", batch.select(col(idCol)).schema.head.dataType),
-        StructField("corpus_id", index.sets.schema("corpus_id").dataType),
-        StructField("jaccard", DoubleType, nullable = false)))
-      val matches = nearMatches(derive(batch, idCol, textCol, index.params), index, threshold)
-      batch.sparkSession.createDataFrame(
-        matches.map { case (b, c, j) => Row(b, c, j) }.toSeq.asJava, schema)
+      val rows = derived(batch, idCol, textCol, index.params)
+      verifiedAgainst(local(rows), index, threshold).localCheckpoint(true)
     }
 
-  /** One batch row as the materialized path holds it on the driver:
-    * its id, fingerprint, shingles (null when it has none) and the
-    * bucket key of each band (indexed by band).
+  /** The batch side of the near-duplicate plan: (batch_id, __shingles,
+    * __sig) for each row with a non-empty shingle set — the same
+    * expressions that sign the stored corpus side.
     */
-  private final case class Derived(
-      id: Any, key: String, shingles: Array[String], buckets: Array[Long])
+  private def signedSets(
+      batch: DataFrame, idCol: String, textCol: String, p: Params): DataFrame =
+    signed(batch
+      .select(col(idCol).as("batch_id"),
+        Dedup.shingles(col(textCol), p.shingleSize).as("__shingles"))
+      .filter(size(col("__shingles")) > 0), p)
 
-  /** Derive every batch row once — fingerprint, shingles, MinHash band
-    * keys — behind one hash exchange of the raw rows, and collect. The
-    * exchange keeps the CPU-dense signing at the shuffle width: a
-    * one-file batch would otherwise sign in ONE scan task.
+  /** A batch derived once and collected: (batch_id, __key, __shingles,
+    * __sig) rows, the last two null for a row without shingles. */
+  private final case class Derived(
+      spark: SparkSession, rows: Array[Row], schema: StructType)
+
+  /** Derive `batch` once and collect it. One hash exchange of the raw
+    * rows comes first, so the CPU-dense signing runs at the shuffle
+    * width (a one-file batch would otherwise sign in ONE scan task).
+    * The state is batch-bounded.
     */
-  private def derive(
-      batch: DataFrame, idCol: String, textCol: String, p: Params): Array[Derived] = {
+  private def derived(
+      batch: DataFrame, idCol: String, textCol: String, p: Params): Derived = {
     val spread = batch.repartition(
       batch.sparkSession.sessionState.conf.numShufflePartitions, col(idCol))
-    val sets = spread.select(col(idCol),
+    val sets = spread.select(col(idCol).as("batch_id"),
       TextStats.fingerprintMd5(col(textCol)).as("__key"),
       Dedup.shingles(col(textCol), p.shingleSize).as("__shingles"))
-    val signed = sets.withColumn("__sig", when(size(col("__shingles")) > 0,
-      Dedup.minhashSignature(col("__shingles"), p.numHashes, p.seed)))
-    signed.select(col(idCol), col("__key"),
-        when(size(col("__shingles")) > 0, col("__shingles")),
-        array((0 until p.bands).map(Dedup.bandBucket(col("__sig"), _, p.rowsPerBand)): _*))
-      .collect().map { r =>
-        val shingles = Option(r.getSeq[String](2)).map(_.toArray).orNull
-        Derived(r.get(0), r.getString(1), shingles,
-          if (shingles == null) null else r.getSeq[Long](3).toArray)
-      }
+    // rows without shingles keep their fingerprint for the exact step
+    // but carry no set: the near plan skips them, as signedSets does
+    val has = size(col("__shingles")) > 0
+    val df = sets.select(col("batch_id"), col("__key"),
+      when(has, col("__shingles")).as("__shingles"),
+      when(has, Dedup.minhashSignature(col("__shingles"), p.numHashes, p.seed)).as("__sig"))
+    Derived(batch.sparkSession, df.collect(), df.schema)
   }
 
-  /** The near step of the materialized path: (batch_id, corpus_id,
-    * jaccard) for the derived rows `rows`.
-    *   - the batch side's (band, bucket) → batch ids map, capped like
-    *     the stored lists ([[graft.functions.CappedCollectList]]: null
-    *     ids skipped, a group over `maxBucketSize` dropped);
-    *   - ONE map-side pass over `buckets`, filtered to the batch's
-    *     bucket keys, collects the matching stored lists; the candidate
-    *     pairs are crossed on the driver;
-    *   - ONE map-side pass over `sets`, filtered to the candidate
-    *     corpus ids, verifies each candidate against the broadcast
-    *     shingles of its batch rows with the lazy plan's size prefilter
-    *     and [[graft.functions.JaccardDistinct]] arithmetic.
+  /** The near plan's batch side over collected [[Derived]] rows: a
+    * local relation of (batch_id, __shingles, __sig), without rows that
+    * have no shingles or a null id (which match nothing: the bucket
+    * lists skip null members).
     */
-  private def nearMatches(
-      rows: Array[Derived], index: Index, threshold: Double): Array[(Any, Any, Double)] = {
-    val signed = rows.filter(r => r.id != null && r.shingles != null)
-    val groups = signed.iterator
-      .flatMap(r => r.buckets.iterator.zipWithIndex.map { case (bucket, band) => (band, bucket) -> r.id })
-      .toSeq.groupMap(_._1)(_._2)
-      .filter(_._2.size <= bufferCap(index.params.maxBucketSize))
-    if (groups.isEmpty) return Array.empty
-    val pairs = index.buckets
-      .filter(col("bucket").isin(groups.keys.map(_._2).toSeq.distinct: _*))
-      .select(col("band"), col("bucket"), col("ids"))
-      .collect()
-      .flatMap { s =>
-        val bids = groups.getOrElse((s.getInt(0), s.getLong(1)), Nil)
-        for (c <- s.getSeq[Any](2) if c != null; b <- bids) yield (b, c)
-      }.distinct
-    if (pairs.isEmpty) return Array.empty
-    val shinglesOf = signed.groupMap(_.id)(_.shingles)
-    val byCorpus: Map[Any, Array[(Any, Array[String])]] = pairs.groupMap(_._2)(_._1)
-      .map { case (c, bs) => c -> bs.flatMap(b => shinglesOf(b).map(b -> _)) }
-    val shared = index.sets.sparkSession.sparkContext.broadcast(byCorpus)
-    try index.sets
-      .filter(col("corpus_id").isin(byCorpus.keys.toSeq: _*))
-      .select(col("corpus_id"), col("__shingles"))
-      .rdd.mapPartitions { it =>
-        val candidates = shared.value
-        it.flatMap { r =>
-          val c = r.get(0)
-          val sb = r.getSeq[String](1)
-          candidates.getOrElse(c, Array.empty[(Any, Array[String])]).iterator.flatMap {
-            case (b, sa) =>
-              // J ≥ t ⟹ min ≥ t·max over distinct sets (shingles() are)
-              if (math.min(sa.length, sb.size).toDouble <
-                  threshold * math.max(sa.length, sb.size)) None
-              else {
-                val j = graft.functions.JaccardDistinct.of(
-                  sa.length, sa(_), sb.size, sb(_))
-                if (j >= threshold) Some((b, c, j)) else None
-              }
-          }
-        }
-      }.collect()
-    finally shared.destroy()
+  private def local(d: Derived): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val keep = d.rows.iterator
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(2))
+      .map(r => Row(r.get(0), r.get(2), r.get(3)))
+      .toSeq
+    // one partition: the rows are signed already, so the batch-side
+    // bucket aggregation needs no exchange
+    d.spark.createDataFrame(keep.asJava,
+      StructType(Seq("batch_id", "__shingles", "__sig").map(d.schema(_)))).coalesce(1)
   }
 
-  /** The lazy near-duplicate plan (materialize = false). */
+  /** The near-duplicate plan both modes run, over a batch side `side`
+    * of (batch_id, __shingles, __sig) rows ([[signedSets]] lazily, or
+    * [[local]] rows the materialized paths derived once).
+    */
   private def verifiedAgainst(
-      batch: DataFrame, index: Index, idCol: String, textCol: String,
-      threshold: Double): DataFrame = {
-    val p = index.params
-    // the batch's shingle sets are batch-bounded and feed two branches
-    // (bucket lists + verify): deriving them twice is cheaper than a
-    // cache, whose build is one more job per call
-    def sets(id: String) = batch
-      .select(col(idCol).as(id), Dedup.shingles(col(textCol), p.shingleSize).as("__shingles"))
-      .filter(size(col("__shingles")) > 0)
-    val batchBuckets = cappedBuckets(sets("__bid"), "__bid", "__bids", p)
+      side: DataFrame, index: Index, threshold: Double): DataFrame = {
+    val batchBuckets = cappedBuckets(side, "batch_id", "__bids", index.params)
     // the batch side is batch-bounded by contract (batch ≪ corpus —
     // the module's whole premise); broadcast it so the STORED bucket
     // table is consumed map-side and never shuffled (a sort-merge
-    // join here would exchange the corpus-sized table per call)
-    // matched buckets are batch-bounded ROWS carrying the candidate
-    // mass as lists — exchange them (pinned width) BEFORE the double
-    // explode so pair generation parallelizes with the shuffle width
-    // instead of the bucket scan's split count (a small stored table
-    // scans as ONE task, and the explode of millions of candidate
-    // pairs must not run inside it)
-    val matched = broadcast(batchBuckets)
+    // join here would exchange the corpus-sized table per call).
+    // The candidate pairs come out grouped by corpus id: the probe
+    // emits one (corpus_id, batch-side list) row per stored member of
+    // a matched bucket, and the pair cross product itself is only
+    // formed after the exchange by corpus_id (flatten + distinct of
+    // the collected lists), so it runs at the shuffle width, not
+    // inside the bucket scan (a small stored table scans as ONE task).
+    // That one exchange feeds TWO consumers below: the sets prefilter
+    // reads its keys with no further distinct, and the verify join
+    // needs no further exchange of this side
+    val byCorpus = broadcast(batchBuckets)
       .join(index.buckets, Seq("band", "bucket"))
-      .select(col("__bids"), col("ids"))
-      .repartition(
-        batch.sparkSession.sessionState.conf.numShufflePartitions)
-    // pairs feed TWO consumers below (the sets prefilter and the
-    // verify join); both read the one matched exchange above (exchange
-    // reuse), so the stored buckets are scanned once and only the
-    // explode runs twice
-    val pairs = matched
-      .select(explode(col("__bids")).as("batch_id"), col("ids"))
-      .select(col("batch_id"), explode(col("ids")).as("corpus_id"))
-      .distinct()
+      .select(explode(col("ids")).as("corpus_id"), col("__bids"))
+      .groupBy(col("corpus_id"))
+      .agg(array_distinct(flatten(collect_list(col("__bids")))).as("__bs"))
     // both sides are shingles()-derived (distinct arrays) — the exact
     // size-ratio prefilter (J ≥ t ⟹ min ≥ t·max) skips the per-pair
     // set build for candidates the threshold already excludes; zero
     // false drops, identical post-threshold result
-    val ba = sets("batch_id").withColumnRenamed("__shingles", "__sa")
+    val ba = side.select(col("batch_id"), col("__shingles").as("__sa"))
     // the stored `sets` table is corpus-sized — reduce it to the
     // candidates MAP-SIDE (broadcast semi on the candidate corpus
     // ids) instead of shuffling it whole into the verify join; the
-    // shuffle joins below then move only candidate-bounded rows,
-    // and the per-pair Jaccard work stays spread across shuffle
-    // partitions (a fully broadcast verify would run it inside the
-    // one-task scan of a small sets file)
+    // joins below then move only candidate-bounded rows, and the
+    // per-pair Jaccard work stays spread across shuffle partitions (a
+    // fully broadcast verify would run it inside the one-task scan of
+    // a small sets file)
+    // (the filter, true for every group, keeps `__bs` in this
+    // consumer: pruned to a bare distinct it would need an exchange of
+    // its own)
     val caCand = index.sets
-      .join(broadcast(pairs.select(col("corpus_id")).distinct()),
+      .join(broadcast(byCorpus.filter(size(col("__bs")) > 0).select(col("corpus_id"))),
         Seq("corpus_id"), "left_semi")
       .select(col("corpus_id"), col("__shingles").as("__sb"))
-    pairs.join(ba, "batch_id").join(caCand, "corpus_id")
+    byCorpus.join(caCand, "corpus_id")
+      .select(explode(col("__bs")).as("batch_id"), col("corpus_id"), col("__sb"))
+      .join(ba, "batch_id")
       .filter(least(size(col("__sa")), size(col("__sb"))).cast("double") >=
         lit(threshold) * greatest(size(col("__sa")), size(col("__sb"))))
-      .withColumn("jaccard",
-        graft.functions.JaccardDistinct.jaccardDistinct(col("__sa"), col("__sb")))
+      .select(col("batch_id"), col("corpus_id"),
+        graft.functions.JaccardDistinct.jaccardDistinct(col("__sa"), col("__sb")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
   }
 
   /** `batch` reduced to rows that duplicate nothing in the indexed
@@ -939,44 +896,47 @@ object DedupIndex {
     * oracle).
     *
     * With materialize = true (default) the batch is derived ONCE and
-    * each stored table is read in ONE map-side pass, none shuffled:
+    * no stored table is shuffled:
     *   - batch: one hash exchange of the raw rows derives each row's
-    *     (id, fingerprint, shingles, per-band bucket keys), collected;
-    *   - exact hits: `exact`, filtered to the batch fingerprints; the
-    *     hit fingerprints (at most one per batch row) are collected;
-    *   - near hits, over the exact survivors: `buckets`, filtered to
-    *     the survivors' capped (band, bucket) keys, gives the candidate
-    *     pairs; `sets`, filtered to the candidate corpus ids, is
-    *     verified against the broadcast batch shingles (see
-    *     [[nearDuplicatesAgainst]]) and gives the matched batch ids;
+    *     (id, fingerprint, shingles, MinHash signature), collected;
+    *   - exact hits: `exact`, filtered map-side to the batch
+    *     fingerprints; the hit fingerprints (at most one per batch row)
+    *     are collected;
+    *   - near hits: the exact survivors' derived rows, as a local
+    *     relation, run the [[nearDuplicatesAgainst]] plan (broadcast
+    *     probe of `buckets`, candidate pairs exploded and verified on
+    *     the executors against `sets` filtered to the candidate ids);
+    *     its matched batch ids are collected;
     *   - the result is `batch` filtered by both hit sets. It holds no
     *     join and no cached blocks and does not read the index, so it
     *     stays valid after the index mutates (append, delete, compact).
-    * The driver holds the batch's derived rows and the candidate pairs
-    * (at most batch × bands × `maxBucketSize`) — state bounded by the
-    * batch, the contract the batch-side broadcasts rely on. Exact hits
-    * are filtered by fingerprint and near hits by id, with the lazy
-    * anti-joins' null semantics: a null text survives the exact step
-    * and a null id the near step. materialize = false returns lazy
-    * anti-joins against `exact` and the near matches instead.
+    * The driver holds the batch's derived rows (id, fingerprint,
+    * shingles, signature), the hit fingerprints and the matched ids —
+    * state bounded by the batch, the contract the batch-side broadcasts
+    * rely on; the candidate pairs (at most batch × bands ×
+    * `maxBucketSize`) stay on the executors. Exact hits are filtered by
+    * fingerprint and near hits by id, with the lazy anti-joins' null
+    * semantics: a null text survives the exact step and a null id the
+    * near step. materialize = false returns lazy anti-joins against
+    * `exact` and the near matches instead.
     */
   def dedupAgainst(
       batch: DataFrame, index: Index, idCol: String, textCol: String,
       threshold: Double = 0.8, materialize: Boolean = true): DataFrame =
     if (!materialize)
-      Dedup.lazySurvivorsAgainst(batch, index.exact, idCol, textCol)(
-        verifiedAgainst(_, index, idCol, textCol, threshold))
+      Dedup.lazySurvivorsAgainst(batch, index.exact, idCol, textCol)(b =>
+        verifiedAgainst(signedSets(b, idCol, textCol, index.params), index, threshold))
     else {
-      val rows = derive(batch, idCol, textCol, index.params)
-      val keys = rows.iterator.map(_.key).filter(_ != null).toSeq.distinct
-      val hits: Set[Any] =
-        if (keys.isEmpty) Set.empty
-        else Dedup.distinctValues(
-          index.exact.filter(col("__key").isin(keys: _*)).select(col("__key"))).toSet
-      val survivors = rows.filter(r => r.key == null || !hits.contains(r.key))
-      val nearIds = nearMatches(survivors, index, threshold).map(_._1).distinct
-      Dedup.without(
-        Dedup.without(batch, TextStats.fingerprintMd5(col(textCol)), hits.toArray),
-        col(idCol), nearIds.toArray)
+      val d = derived(batch, idCol, textCol, index.params)
+      val keys = d.rows.iterator.filter(!_.isNullAt(1)).map(_.getString(1)).toSet
+      val hits =
+        if (keys.isEmpty) Array.empty[Any]
+        else Dedup.distinctValues(index.exact.select(col("__key"))
+          .filter(col("__key").isin(keys.toSeq: _*)))
+      val hit = hits.toSet
+      val survivors = d.copy(rows = d.rows.filter(r => r.isNullAt(1) || !hit.contains(r.get(1))))
+      val nearIds = Dedup.matchedBatchIds(verifiedAgainst(local(survivors), index, threshold))
+      Dedup.without(Dedup.without(batch, TextStats.fingerprintMd5(col(textCol)), hits),
+        col(idCol), nearIds)
     }
 }

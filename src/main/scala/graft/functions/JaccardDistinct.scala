@@ -60,7 +60,25 @@ case class JaccardDistinct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val arrA = a.asInstanceOf[ArrayData]
     val arrB = b.asInstanceOf[ArrayData]
-    JaccardDistinct.of(arrA.numElements(), elem(arrA, _), arrB.numElements(), elem(arrB, _))
+    val setA = new java.util.HashSet[AnyRef](math.max(arrA.numElements() * 2, 8))
+    var i = 0
+    while (i < arrA.numElements()) {
+      setA.add(elem(arrA, i))
+      i += 1
+    }
+    val seenB = new java.util.HashSet[AnyRef](math.max(arrB.numElements() * 2, 8))
+    var inter = 0
+    var onlyB = 0
+    var j = 0
+    while (j < arrB.numElements()) {
+      val v = elem(arrB, j)
+      if (seenB.add(v)) {
+        if (setA.contains(v)) inter += 1 else onlyB += 1
+      }
+      j += 1
+    }
+    val union = setA.size() + onlyB
+    if (union == 0) 1.0 else inter.toDouble / union
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -119,38 +137,6 @@ object JaccardDistinct {
     */
   private val NullSentinelObj = new Object
   def nullSentinel(): AnyRef = NullSentinelObj
-
-  /** The expression's arithmetic over two element sequences given by
-    * size and accessor (a null element counts as one distinct element)
-    * — also the verify of [[graft.dedup.DedupIndex.dedupAgainst]],
-    * which scores pairs outside a query plan and must return the
-    * expression's value bit for bit.
-    */
-  def of(sizeA: Int, a: Int => AnyRef, sizeB: Int, b: Int => AnyRef): Double = {
-    def elem(get: Int => AnyRef, i: Int): AnyRef = {
-      val v = get(i)
-      if (v == null) NullSentinelObj else v
-    }
-    val setA = new java.util.HashSet[AnyRef](math.max(sizeA * 2, 8))
-    var i = 0
-    while (i < sizeA) {
-      setA.add(elem(a, i))
-      i += 1
-    }
-    val seenB = new java.util.HashSet[AnyRef](math.max(sizeB * 2, 8))
-    var inter = 0
-    var onlyB = 0
-    var j = 0
-    while (j < sizeB) {
-      val v = elem(b, j)
-      if (seenB.add(v)) {
-        if (setA.contains(v)) inter += 1 else onlyB += 1
-      }
-      j += 1
-    }
-    val union = setA.size() + onlyB
-    if (union == 0) 1.0 else inter.toDouble / union
-  }
 
   def jaccardDistinct(a: Column, b: Column): Column =
     ExpressionBridge.column(
